@@ -64,6 +64,70 @@ def calibrate(spark) -> dict[str, float]:
     return {"jvm_sec": round(jvm, 3), "py_sec": round(py, 3)}
 
 
+def warm_up(spark, sf_dir: str, queries) -> None:
+    """Bring the session to steady state before timed ``noop_pass``es
+    over ``queries`` at ``sf_dir``, so they measure the plans, not
+    one-time costs, and end with an empty cache."""
+    # Executor/codegen spin-up.
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    # Warm each PLAN at the smallest scale factor: the generated code
+    # for giant higher-order expression trees (minhash, jaccard verify)
+    # JIT-compiles on first execution — a 3-4× one-time cost that would
+    # otherwise be billed to whichever query runs first. Skipped when
+    # the target itself is sf0.001.
+    target = os.path.abspath(sf_dir)
+    warm_dir = os.path.join(os.path.dirname(target), "sf0.001")
+    if warm_dir != target and os.path.isdir(warm_dir):
+        for name in sorted(queries):
+            try:
+                queries[name].spark(spark, warm_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            except Exception:
+                pass  # warmup is best-effort; the timed run surfaces real errors
+    if any(n.startswith("telemetry_") for n in queries):
+        # train-once model cache: the scoring queries should time
+        # vectorized inference, not RF training
+        from real_time_predictive_maintenance_data_pipeline_spark.plans.telemetry import (
+            _model,
+        )
+
+        _model(spark)
+    # Pre-read the dataset so the timed passes measure the ENGINE, not
+    # the host's page-cache state: a cold first-touch bills multi-second
+    # disk reads to whichever query scans a table first (measured
+    # 1.3-4.7x drift on plan-identical queries).
+    for root, _, files in os.walk(sf_dir):
+        for f in files:
+            with open(os.path.join(root, f), "rb") as fh:
+                while fh.read(8 << 20):
+                    pass
+    spark.catalog.clearCache()
+
+
+def noop_pass(spark, sf_dir: str, queries) -> dict[str, tuple[float, float]]:
+    """Run every query once, in name order, through the noop sink (so
+    the full plan executes; count() alone lets Spark prune the compute
+    being measured). Returns per-query (build_s, exec_s): plan
+    construction plus Catalyst analysis on the driver, then the write.
+
+    Queries tagged "caches" persist intermediates inside their plan
+    (the cached partitions outlive the returned DataFrame); the cache
+    is cleared after each of them so a pass doesn't accumulate executor
+    storage memory."""
+    out: dict[str, tuple[float, float]] = {}
+    for name in sorted(queries):
+        q = queries[name]
+        t0 = time.perf_counter()
+        df = q.spark(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        out[name] = (t1 - t0, time.perf_counter() - t1)
+        if "caches" in q.tags:
+            spark.catalog.clearCache()
+    return out
+
+
 def _mrg_tier(spark, sf_dir: str, queries) -> dict[str, float]:
     """Multi-row-group exec tier (see the call site): rewrite each
     fixture table with ~32 row groups, floor the scan split count at
@@ -101,15 +165,9 @@ def _mrg_tier(spark, sf_dir: str, queries) -> dict[str, float]:
         try:
             out: dict[str, float] = {}
             for _ in range(2):
-                for name in sorted(queries):
-                    q = queries[name]
-                    df = q.spark(spark, mrg_dir)
-                    t0 = time.perf_counter()
-                    df.write.format("noop").mode("overwrite").save()
-                    dt = round(time.perf_counter() - t0, 3)
-                    out[name] = min(out.get(name, dt), dt)
-                    if "caches" in q.tags:
-                        spark.catalog.clearCache()
+                for name, (_, e) in noop_pass(spark, mrg_dir, queries).items():
+                    e = round(e, 3)
+                    out[name] = min(out.get(name, e), e)
             return out
         finally:
             for k, v in saved.items():
@@ -141,53 +199,12 @@ def main() -> None:
 
     queries = {n: q for n, q in all_queries().items() if q.bench}
 
-    # Warm the executors/codegen once so per-query numbers measure the
-    # plan, not JVM spin-up.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # Then warm each headline PLAN at the smallest scale factor: the
-    # generated code for giant higher-order expression trees (minhash,
-    # jaccard verify) JIT-compiles on first execution — a 3-4× one-time
-    # cost that would otherwise be billed to whichever query runs first.
-    # Steady-state throughput is what the bench compares across rounds.
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if os.path.isdir(warm_dir) and warm_dir != sf_dir.rstrip("/"):
-        for name in sorted(queries):
-            try:
-                queries[name].spark(spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass  # warmup is best-effort; the timed run surfaces real errors
-    if any(n.startswith("telemetry_") for n in queries):
-        # train-once model cache: the scoring headline should time
-        # vectorized inference, not RF training
-        from real_time_predictive_maintenance_data_pipeline_spark.plans.telemetry import (
-            _model,
-        )
-
-        _model(spark)
-
-    # Pre-read the benchmark dataset once so the timed loop measures
-    # the ENGINE, not the host's page-cache state: this sandbox
-    # periodically evicts the cache, and a cold first-touch bills
-    # multi-second disk reads to whichever query scans a table first
-    # (measured 1.3-4.7x drift on plan-identical queries).
-    for root, _, files in os.walk(sf_dir):
-        for f in files:
-            with open(os.path.join(root, f), "rb") as fh:
-                while fh.read(8 << 20):
-                    pass
+    warm_up(spark, sf_dir, queries)
 
     # Calibrate BEFORE and AFTER the timed loop: two snapshots bound
     # the host class the queries actually ran under (a mid-run load
     # spike shows as calib_end >> calib_start).
     calib_start = calibrate(spark)
-
-    # Queries tagged "caches" persist intermediates inside their plan
-    # (the cached partitions outlive the returned DataFrame); clear
-    # them between queries so the loop doesn't accumulate executor
-    # storage memory across the run.
-    spark.catalog.clearCache()
 
     # Repeat the timed loop n>=3 times: the FIRST pass is the headline
     # (comparable to prior rounds, which timed a single pass); the
@@ -210,15 +227,9 @@ def main() -> None:
     build_best: dict[str, float] = {}
     exec_best: dict[str, float] = {}
     for i in range(repeat):
-        for name in sorted(queries):
-            q = queries[name]
-            t0 = time.perf_counter()
-            df = q.spark(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            dt = round(t2 - t0, 3)
-            b, e = round(t1 - t0, 3), round(t2 - t1, 3)
+        for name, (b, e) in noop_pass(spark, sf_dir, queries).items():
+            dt = round(b + e, 3)
+            b, e = round(b, 3), round(e, 3)
             if i == 0:
                 timings[name] = dt
                 build_first[name] = b
@@ -226,8 +237,6 @@ def main() -> None:
             best[name] = min(best.get(name, dt), dt)
             build_best[name] = min(build_best.get(name, b), b)
             exec_best[name] = min(exec_best.get(name, e), e)
-            if "caches" in q.tags:
-                spark.catalog.clearCache()
 
     # Exec-dominated tier: the sf0.1 fixtures are single-row-group
     # parquet files, so scans can't split and the 8-vs-32-core scaling
@@ -239,10 +248,11 @@ def main() -> None:
     # methodology above is untouched, the rewrite is derived from the
     # run's own inputs and deleted afterwards.
     mrg_exec: dict[str, float] = {}
+    mrg_error = None
     try:
         mrg_exec = _mrg_tier(spark, sf_dir, queries)
-    except Exception:
-        mrg_exec = {}
+    except Exception as exc:
+        mrg_error = str(exc)
 
     total = round(sum(timings.values()), 3)
     # Host-load telemetry rides along so per-round triage (is an
@@ -276,10 +286,12 @@ def main() -> None:
                 "queries_build_best": build_best,
                 "queries_exec_best": exec_best,
                 # exec-dominated tier: noop exec over a multi-row-group
-                # rewrite of the same inputs (min of 2 passes); {} if
-                # the tier failed — never breaks the headline contract
+                # rewrite of the same inputs (min of 2 passes); {} plus
+                # mrg_exec_error if the tier failed — never breaks the
+                # headline contract
                 "queries_mrg_exec": mrg_exec,
                 "value_mrg_exec": round(sum(mrg_exec.values()), 3),
+                **({} if mrg_error is None else {"mrg_exec_error": mrg_error}),
                 "calib": {
                     "start": calib_start,
                     "end": calib_end,

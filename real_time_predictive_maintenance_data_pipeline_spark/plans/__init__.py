@@ -1,13 +1,13 @@
 from .registry import Query, all_queries, get_query, register  # noqa: F401
 
-
-def load_all() -> None:
-    """Import every catalog module so registration side-effects run."""
-    from . import (  # noqa: F401
-        analytics,
-        curation,
-        governance,
-        llm,
-        relational,
-        telemetry,
-    )
+# Import every catalog module here, in this fixed order: registration
+# order is the catalog order, so it must not depend on which plan module
+# a caller happens to import first.
+from . import (  # noqa: E402, F401
+    analytics,
+    curation,
+    governance,
+    llm,
+    relational,
+    telemetry,
+)

@@ -42,7 +42,8 @@ def _cents(col: str) -> F.Column:
 # 10^4 and rounding lands on the exact integer in both engines.
 # (A function, not a module constant: building a Column requires an
 # active SparkContext, and the catalog must import session-free —
-# tools/check_window.py walks it before any session exists.)
+# __spark_entry__ and tools/plan_digest.py import it before any
+# session exists.)
 def _rev_tmt() -> F.Column:
     return F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000)
 

@@ -53,435 +53,6 @@ class Query:
 
 _REGISTRY: dict[str, Query] = {}
 
-# The driver's per-round correctness harness compares the FIRST 50 queries in
-# catalog order against the DuckDB oracle. Rounds 1 and 2 verified the names
-# in ``_DRIVER_VERIFIED`` (hash-green or rows-only-by-contract) — see
-# CORRECTNESS_r01.json / CORRECTNESS_r02.json. To get CORRECTNESS rows onto
-# the rest of the catalog, ``all_queries()`` orders the catalog as:
-#   1. ``_RECHECK_FIRST``   — prior-round failures / changed queries that must
-#      re-verify (empty when nothing regressed or changed semantics)
-#   2. ``_WINDOW_PRIORITY`` — curated not-yet-verified set packed to exactly
-#      fill the 50-query window together with the rechecks
-#   3. every other not-yet-verified query, in registration order
-#   4. ``_DRIVER_VERIFIED`` — already green; rotated to the back
-# Rotate newly-verified names into ``_DRIVER_VERIFIED`` each round until the
-# whole catalog has driver rows. ``tools/check_window.py`` asserts the window
-# arithmetic (len(_RECHECK_FIRST) + len(_WINDOW_PRIORITY) == 50, no overlap,
-# no verified name inside the window without a recheck reason).
-# The round this window layout was packed FOR (i.e. results of rounds
-# < this are incorporated into _DRIVER_VERIFIED below). tools/
-# check_window.py compares it against the driver's PROGRESS.jsonl round
-# counter: a new round with a stale epoch fails the test suite until
-# the previous round's CORRECTNESS names are rotated — the guard that
-# the round-2 and round-3 verdicts asked for after two forgotten
-# rotations.
-_ROTATED_FOR_ROUND = 17
-
-_RECHECK_FIRST: tuple[str, ...] = (
-    # ROUND-17 WINDOW (regenerated via tools/plan_next_window.py;
-    # PLAN_DIGESTS regenerated pre-rotation). Mandatory section — every
-    # plan-digest change from the r17 optimization commits plus the
-    # digest-blind ones:
-    # - q21_sole_returner: PLAN CHANGED — single orderkey exchange
-    #   shared by grain agg + orders join + window (F-join moved below
-    #   the windows). Oracle hash-green at 3 SFs pre-commit.
-    # - q8_market_share: PLAN CHANGED — orders⋈customer moved off the
-    #   fact path (custkey shuffle now dim-sized). Hash-green at 3 SFs.
-    # - dedup_clusters / sem_dedup: digest change via
-    #   min_label_components' batched (2-steps-per-job) propagation;
-    #   outputs proven identical (old-vs-new row equality at sf0.1;
-    #   chain-graph + union-find tests).
-    # - doc_dup_pagerank: digest change via pagerank's checkpointed
-    #   edge frame + lazy rank checkpoints; rows identical old-vs-new,
-    #   numpy power-iteration parity test green.
-    # - dedup_embedding_pairs / rel_record_linkage / rel_bootstrap_ci:
-    #   PLAN CHANGED — spread of the streamed/exploded side of an
-    #   under-split local scan (24.5→1.9 s, 6.1→0.6 s, 8.2→1.4 s at
-    #   sf0.1); hash-green at 3 SFs pre-commit.
-    # - graph_triangle_count: PLAN CHANGED — edge frames checkpointed
-    #   once for the four consumers; count identical, hash-green.
-    # - doc_bpe_vocab / doc_bpe_encode: digest-BLIND multi-merge
-    #   batching in train_bpe (localCheckpoint roots hide it) —
-    #   deliberate recheck; merge sequences equal the sequential
-    #   reference on the corpora + a new tie-heavy fuzz gate.
-    # Then the oldest aged names (r08/r10 evidence) per the
-    # steady-state least-recently-checked rotation (43 slots).
-    "q21_sole_returner",
-    "q8_market_share",
-    "dedup_clusters",
-    "doc_dup_pagerank",
-    "sem_dedup",
-    "doc_bpe_vocab",
-    "doc_bpe_encode",
-    "dedup_embedding_pairs",
-    "rel_record_linkage",
-    "rel_bootstrap_ci",
-    "graph_triangle_count",
-    "rel_except",
-    "rel_asof_join",
-    "q6_forecast_revenue",
-    "telemetry_mqtt_wildcard",
-    "sim_ann_lsh",
-    "mm_feature_extract",
-    "mm_resize",
-    "sim_hard_negatives",
-    "mm_phash_neardup",
-    "q10_returned_items",
-    "q18_large_orders",
-    "rel_except_all",
-    "rel_intersect_all",
-    "src_csv_roundtrip",
-    "src_partitioned_pruned",
-    "src_json_roundtrip",
-    "rel_sql_api",
-    "rel_salted_join",
-    "rel_window_distribution",
-    "rel_window_range_frame",
-    "q14_promo_revenue",
-    "q19_disjunctive",
-    "src_orc_roundtrip",
-    "q7_nation_volume",
-    "q13_customer_distribution",
-    "q17_small_quantity",
-    "rel_join_right",
-    "src_text_roundtrip",
-    "q4_order_priority",
-    "q12_shipmode_priority",
-    "q22_global_sales_opportunity",
-    "q2_best_supplier",
-    "q9_nation_profit",
-    "q11_important_parts",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q20_heavy_suppliers",
-    "rel_recursive_cte",
-    "telemetry_score_500k",
-)
-
-_WINDOW_PRIORITY: tuple[str, ...] = (
-    # Empty under the ROUND-8+ STEADY-STATE POLICY (recorded per the r6
-    # verdict's task 6): every catalog name has a driver row since r7,
-    # so the window stops chasing coverage and becomes a ROTATING
-    # RECHECK: pack _RECHECK_FIRST with (a) any query whose Spark plan
-    # or oracle text changed this round (mandatory), then (b) the
-    # least-recently-driver-checked 50-name slice of the catalog in age
-    # order (ties by registration order), so the whole catalog re-earns
-    # driver evidence roughly every 6-7 rounds. New queries enter only
-    # to serve a real SURVEY gap and go to the front of the next
-    # window. sf0.1 sweeps via tools/sweep_catalog.py remain the
-    # pre-commit gate for any float-sensitive change.
-    # tools/plan_next_window.py prints the ready-to-paste proposal and
-    # lists latest-round FAILURES as mandatory rechecks.
-    # "Spark plan changed" is detected MECHANICALLY since r9: regenerate
-    # PLAN_DIGESTS.json (python tools/plan_digest.py) after operator
-    # edits and commit it; the planner diffs it against the copy at the
-    # last round boundary and lists changed names as mandatory — the r8
-    # ADVICE gap (changed sim_*/dedup_clusters/mm_* plans missing their
-    # recheck) cannot silently recur. Since r11 the planner ALSO diffs
-    # the digests committed at the last TWO round boundaries, so an
-    # edit committed in the same snapshot as its regenerated digest
-    # file (the r9 blind spot) is flagged one boundary later.
-    # STALL POLICY (r10 post-mortem, keep deliberately): a round that
-    # produces no commits leaves _ROTATED_FOR_ROUND stale, which fails
-    # tools/check_window.py and turns the pytest suite red at the next
-    # boundary. That red test is the INTENDED loud signal that a round
-    # was skipped — diagnose by comparing _ROTATED_FOR_ROUND against
-    # PROGRESS.jsonl's round counter (a `"turns": 0` line = the round
-    # never ran); the fix is always "rotate the window", never "relax
-    # the check".
-)
-
-_DRIVER_VERIFIED: tuple[str, ...] = (
-    # Cumulative r01-r16 green names (zero failures across sixteen
-    # rounds), MINUS the 50 names rotated into the r17 recheck window
-    # above. Under the steady-state policy this list tracks
-    # "not in the current recheck window".
-    "telemetry_buffered_sink",
-    "telemetry_historical_stats",
-    "telemetry_stream_roundtrip",
-    "rel_skew_report",
-    "rel_join_explosion_estimate",
-    "rel_offset_fetch_pagination",
-    "rel_union_by_name_missing",
-    "rel_null_ordering_rank",
-    "rel_proportions_ztest",
-    "events_error_rate_wilson",
-    "ts_week_over_week",
-    "ml_quality_classifier",
-    "ml_als_recommend",
-    "ml_isotonic_calibration",
-    "ml_cv_model_selection",
-    "dedup_simhash",
-    "doc_stratified_sample",
-    "dedup_simhash_banded",
-    "doc_token_stats",
-    "doc_quality",
-    "doc_langid",
-    "doc_fingerprint",
-    "dedup_exact",
-    "mm_binary_stats",
-    "mm_frame_sample",
-    "doc_token_regex",
-    "doc_punct_ratio",
-    "doc_top_terms",
-    "doc_chunk",
-    "doc_pii_redact",
-    "emb_quantize_int8",
-    "emb_label_centroids",
-    "lake_replay_audit",
-    "emb_coreset_per_label",
-    "doc_vocab_growth",
-    "doc_stable_sample",
-    "rel_agg_bool_bit",
-    "events_retention_cohorts",
-    "events_funnel_steps",
-    "events_mad_outliers",
-    "rel_mode_per_group",
-    "src_bucketed_join",
-    "ts_resample_ohlc",
-    "rel_count_distinct_multi",
-    "rel_zorder_key",
-    "src_compaction",
-    "rel_session_window_builtin",
-    "doc_normalize_text",
-    "doc_curriculum_order",
-    "doc_token_budget_select",
-    "rel_k_anonymity",
-    "rel_chi_square",
-    "rel_delete_where_rewrite",
-    "emb_matryoshka_truncate",
-    "emb_recall_eval",
-    "dedup_incremental_batch",
-    "events_activity_streaks",
-    "rel_basket_pairs_lift",
-    "doc_zipf_slope",
-    "doc_langid_confusion",
-    "doc_blocklist_filter",
-    "doc_chunk_sliding",
-    "doc_dataset_card",
-    "events_state_spans",
-    "mm_bytes_arrow",
-    "rel_sql_pipe",
-    "rel_transpose",
-    "rel_cms_freq_estimate",
-    "rel_weighted_median",
-    "rel_spatial_grid_join",
-    "events_last_touch_attribution",
-    "rel_capped_running_balance",
-    "rel_fifo_allocation",
-    "rel_equidepth_histogram",
-    "rel_snapshot_diff",
-    "events_psi_drift",
-    "rel_benford_digits",
-    "ml_kaplan_meier",
-    "src_bucketed_groupby",
-    "rel_sql_udf",
-    "ml_roc_auc",
-    "ml_lift_deciles",
-    "ml_roc_auc_hist",
-    "ml_lift_bucketed",
-    "ml_confusion_threshold",
-    "ml_ndcg_at_k",
-    "rel_geo_harmonic_means",
-    "ml_precision_at_k",
-    "emb_dim_variance_topk",
-    "rel_cuped_adjustment",
-    "rel_experiment_mde",
-    "doc_chunk_dedup",
-    "doc_char_entropy",
-    "doc_compression_ratio",
-    "doc_bm25_search",
-    "ts_interpolate_linear",
-    "ts_cusum_changepoint",
-    "ml_survival_aft",
-    "rel_incremental_agg_refresh",
-    "emb_pca_whitening",
-    "events_markov_transitions",
-    "events_top_paths",
-    "ts_seasonal_hour_profile",
-    "events_rolling_active_users",
-    "rel_pareto_cumshare",
-    "ts_stl_decompose",
-    "ts_mtbf_stats",
-    "rel_regexp_funcs",
-    "rel_window_ignore_nulls",
-    "rel_changelog_apply",
-    "rel_dq_expectations",
-    "src_dynamic_overwrite",
-    "src_schema_evolution",
-    "src_csv_quarantine",
-    "rel_ab_ttest",
-    "ts_holt_linear",
-    "events_ks_two_sample",
-    "events_finite_quarantine",
-    "lake_finite_quarantine",
-    "lake_dim_quarantine",
-    "lake_temporal_quarantine",
-    "events_time_to_convert",
-    "ml_kmeans_embeddings",
-    "emb_normalize",
-    "doc_keep_decision",
-    "doc_length_buckets",
-    "doc_pack_sequences",
-    "doc_unigram_logprob",
-    "doc_tfidf_top_terms",
-    "emb_dim_stats",
-    "emb_centroid_outliers",
-    "doc_domain_mix_weights",
-    "rel_string_funcs",
-    "rel_date_funcs",
-    "rel_case_when",
-    "rel_json_funcs",
-    "rel_null_safe_eq",
-    "rel_events_hourly",
-    "rel_sessionize",
-    "rel_distinct_rows",
-    "rel_array_funcs",
-    "rel_percentiles",
-    "rel_exists_subquery",
-    "rel_not_in_subquery",
-    "rel_interval_arith",
-    "rel_levenshtein",
-    "rel_grouped_regression",
-    "rel_map_funcs",
-    "rel_profile_columns",
-    "rel_rollup_reuse",
-    "ts_gap_fill_hourly",
-    "rel_null_funcs",
-    "rel_string_agg",
-    "rel_arg_minmax",
-    "rel_corr_covar",
-    "rel_unpivot",
-    "rel_histogram",
-    "rel_try_arith",
-    "rel_explode",
-    "rel_latest_by_key",
-    "rel_grouped_median_pandas",
-    "rel_interval_join_banded",
-    "rel_rolling_zscore",
-    "rel_skew_kurtosis",
-    "rel_variant_semistructured",
-    "rel_lateral_topk",
-    "src_xml_roundtrip",
-    "rel_python_udtf",
-    "src_binaryfile_ingest",
-    "rel_merge_upsert",
-    "rel_scd2_history",
-    "rel_observe_metrics",
-    "rel_heavy_hitters",
-    "ts_ewma_last",
-    "telemetry_artifact_score",
-    "lake_replay_audit_approx",
-    "rel_parameterized_sql",
-    "doc_dsir_importance",
-    "rel_rfm_segmentation",
-    "rel_abc_classification",
-    "rel_yoy_growth",
-    "rel_gini_coefficient",
-    "rel_herfindahl_index",
-    "rel_entropy_by_group",
-    "rel_percent_of_total",
-    "rel_top_decile_ratio",
-    "events_dau_stickiness",
-    "events_interarrival_stats",
-    "events_autocorr_lag1",
-    "events_power_user_share",
-    "ts_bollinger_bands",
-    "ts_max_drawdown",
-    "events_weekday_profile",
-    "ts_xmr_control",
-    "doc_ttr",
-    "doc_hapax_ratio",
-    "doc_word_len_profile",
-    "rel_pivot_multi_agg",
-    "rel_collect_sorted_string",
-    "rel_word_positions",
-    "rel_reorder_gaps",
-    "rel_date_spine_fill",
-    "rel_weighted_avg_price",
-    "rel_self_excluding_avg",
-    "graph_degree_histogram",
-    "graph_jaccard_pairs",
-    "emb_norm_quantiles",
-    "emb_simhash_bits",
-    "doc_shingle_uniqueness",
-    "ml_brier_calibration",
-    "rel_json_props_stats",
-    "rel_cohort_ltv",
-    "events_cumulative_users",
-    "rel_new_vs_returning",
-    "doc_js_divergence",
-    "ts_naive_forecast_error",
-    "events_hourly_heatmap",
-    "rel_order_linecount_dist",
-    "rel_grouping_id",
-    "rel_abc_prefix2",
-    "rel_rfm_bucketed",
-    "rel_srm_check",
-    "rel_approx_distinct",
-    "rel_approx_quantile",
-    "rel_hll_partial_merge",
-    "sim_ivf_pq_topk",
-    "telemetry_mqtt_roundtrip",
-    "emb_opq_rotation",
-    "sim_ivf_topk",
-    "emb_pq_codes",
-    "sim_pq_adc_topk",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "doc_decontaminate",
-    "doc_repetition",
-    "doc_bigrams",
-    "doc_bigram_lm",
-    "doc_curation_funnel",
-    "doc_ngram_novelty",
-    "doc_span_dedup",
-    "doc_winnow",
-    "mm_audio_rms",
-    "q1_pricing_summary",
-    "rel_agg_stats",
-    "rel_agg_distinct",
-    "rel_having",
-    "rel_rollup",
-    "rel_cube",
-    "rel_grouping_sets",
-    "rel_pivot_status",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "rel_join_inner",
-    "rel_join_left",
-    "rel_join_full",
-    "rel_join_semi",
-    "rel_join_anti",
-    "rel_join_cross",
-    "rel_range_join",
-    "rel_scalar_subquery",
-    "rel_window_rank",
-    "rel_window_running",
-    "rel_window_moving_avg",
-    "rel_topk_global",
-    "rel_topk_per_group",
-    "rel_union",
-    "rel_intersect",
-    "sim_topk_bruteforce",
-    "sim_knn_batch",
-    "telemetry_scored_alerts",
-    "telemetry_train_metrics",
-    "telemetry_pysource_stats",
-)
-
-
-def _catalog_order(names: list[str]) -> list[str]:
-    """Order the catalog so the driver's fixed correctness window lands on
-    not-yet-verified queries (see comment on the lists above)."""
-    rank = {n: (0, i) for i, n in enumerate(_RECHECK_FIRST)}
-    for i, n in enumerate(_WINDOW_PRIORITY):
-        rank.setdefault(n, (1, i))
-    for i, n in enumerate(_DRIVER_VERIFIED):
-        rank.setdefault(n, (3, i))
-    reg = {n: i for i, n in enumerate(names)}
-    return sorted(names, key=lambda n: rank.get(n, (2, reg[n])))
-
 
 def register(
     name: str,
@@ -507,10 +78,8 @@ def register(
 
 
 def all_queries() -> dict[str, Query]:
-    from . import load_all
-
-    load_all()
-    return {n: _REGISTRY[n] for n in _catalog_order(list(_REGISTRY))}
+    """Every registered query, in registration order."""
+    return dict(_REGISTRY)
 
 
 def get_query(name: str) -> Query:

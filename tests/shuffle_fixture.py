@@ -12,7 +12,7 @@ summation order on non-integral doubles) is silently nondeterministic
 in production even though it hash-matches the oracle on the fixed
 fixture files. ``tools/audit_determinism.py`` walks the whole oracled
 catalog against this fixture; ``tests/test_determinism.py`` walks the
-current driver window inside the suite.
+first 50 registered queries inside the suite.
 """
 
 from __future__ import annotations

@@ -4,22 +4,22 @@ LAYOUT moves).
 
 The oracle mirror proves each query matches DuckDB on the FIXED
 fixture files; it cannot distinguish "order-stable by design" from
-"order-stable because the layout never changed". Here the current
-driver window's oracled queries run twice — pristine fixtures vs a
-seeded row permutation split into uneven part files — and must return
-byte-identical canonical multisets (floats by exact IEEE-754 bytes).
-At 100 TB compaction and task racing reorder rows constantly; a
-tie-break or partial-agg-order drift under permutation is silent
-production nondeterminism even with a green oracle hash.
+"order-stable because the layout never changed". Here the oracled
+queries among the first 50 registered ones run twice — pristine
+fixtures vs a seeded row permutation split into uneven part files —
+and must return byte-identical canonical multisets (floats by exact
+IEEE-754 bytes). At 100 TB compaction and task racing reorder rows
+constantly; a tie-break or partial-agg-order drift under permutation
+is silent production nondeterminism even with a green oracle hash.
 
-The suite walks only the rotating 50-name window (bounded time; the
-window covers the whole catalog every ~6-7 rounds); the full-catalog
-walk is ``python tools/audit_determinism.py`` (run at round close,
-recorded in SCALING.md). Approx-sketch and estimator families are
-rows-only, hence never in scope here — their layout-dependence is
-bounded by ε-gates instead (e.g. ``rel_approx_quantile``'s KLL merge
-order moves the estimate within its rank-error bound — measured, and
-the documented contract for that family).
+The suite walks only the first 50 registered queries (the names the
+driver checks first), which bounds its time; the full-catalog walk is
+``python tools/audit_determinism.py`` (recorded in SCALING.md).
+Approx-sketch and estimator families are rows-only, hence never in
+scope here — their layout-dependence is bounded by ε-gates instead
+(e.g. ``rel_approx_quantile``'s KLL merge order moves the estimate
+within its rank-error bound — measured, and the documented contract
+for that family).
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ from .conftest import SF_SMOKE
 from .shuffle_fixture import shuffle_tables
 
 QUERIES = all_queries()
+# Scope: the oracled queries among the first 50 registered ones.
 # The telemetry eager-io entries are excluded BY SCOPE (r15): they
 # generate their own seeded/wire input and never read sf_dir, so
 # "pristine vs shuffled fixtures" compares two independent GENERATION

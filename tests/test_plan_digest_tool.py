@@ -1,10 +1,9 @@
-"""tools/plan_digest.py — the mechanical "did this round change this
-query's plan?" detector behind the r8+ rotation policy (the round-8
-ADVICE found plan-changed queries missing their mandatory recheck
-because that judgment was manual). These tests pin what makes the
-digest trustworthy: insensitivity to everything Catalyst regenerates
-per session, sensitivity to real plan edits, and full catalog coverage
-of the committed PLAN_DIGESTS.json.
+"""tools/plan_digest.py — the mechanical "did this change alter this
+query's plan?" detector (a refactor shows it left every plan unchanged
+with ``--check``). These tests pin what makes the digest trustworthy:
+insensitivity to everything Catalyst regenerates per session,
+sensitivity to real plan edits, and full catalog coverage of the
+committed PLAN_DIGESTS.json.
 """
 
 from __future__ import annotations
@@ -48,7 +47,7 @@ def test_digest_survives_lambda_ordinal_drift(spark):
     """Higher-order-function lambda variables render with a PER-SESSION
     ordinal (x_10#917) that counts every lambda constructed earlier in
     the session — i.e. pure registration order. Found in r11: reordering
-    the registry window tuples flipped 36 transform/aggregate digests
+    the catalog flipped 36 transform/aggregate digests
     with zero plan changes. The same authored lambda query must hash
     identically after other lambda-using plans are constructed."""
 
@@ -72,8 +71,8 @@ def test_digest_survives_lambda_ordinal_drift(spark):
 
 def test_digest_sensitive_to_real_plan_change(spark):
     """An actual semantic edit (extra filter, changed constant, new
-    column) must change the digest — otherwise the rotation policy
-    would never see edited operators."""
+    column) must change the digest — otherwise ``--check`` would never
+    see edited operators."""
     base = digest(_build(spark))
     assert digest(_build(spark).filter(F.col("sx") > 0)) != base
     assert (
@@ -129,8 +128,8 @@ def test_committed_digests_cover_whole_catalog():
     stale = [n for n in digests if n not in names and not n.startswith("__")]
     assert not stale, f"regenerate PLAN_DIGESTS.json: removed queries {stale[:5]}"
     # the r11 attribution record: fixture schema fingerprints ride along
-    # under the reserved __fixtures__ key so the window planner can tell
-    # testdata regeneration apart from code-driven plan changes
+    # under the reserved __fixtures__ key so --check can tell testdata
+    # regeneration apart from code-driven plan changes
     from tools.plan_digest import fixture_fingerprints
 
     assert digests.get("__fixtures__") == fixture_fingerprints()

@@ -1,17 +1,13 @@
-"""Fingerprint every catalog query's ANALYZED logical plan so window
-rotation can detect "Spark plan changed this round" MECHANICALLY.
+"""Fingerprint every catalog query's ANALYZED logical plan, so a
+refactor can show that it left every plan unchanged.
 
-Why: the round-8 ADVICE found plan-changed queries (similarity /
-label-propagation / multimodal nulls hardening) sitting outside the
-driver recheck window because "did this round change that query's
-plan?" was a human judgment over the diff. This tool removes the
-judgment: it builds each registered query at sf0.001, canonicalizes
-``analyzed().toString()`` (expression ids, plan ids, file paths
-and scratch dirs stripped — everything Catalyst regenerates per
-session), and writes ``PLAN_DIGESTS.json`` {name: sha256-16}. Commit
-the file each round; ``tools/plan_next_window.py`` then diffs the
-working-tree digests against the last round boundary and prints the
-changed names as MANDATORY recheck candidates.
+The tool builds each registered query at sf0.001, canonicalizes
+``analyzed().toString()`` (expression ids, plan ids, file paths and
+scratch dirs stripped — everything Catalyst regenerates per session)
+and writes ``PLAN_DIGESTS.json`` {name: sha256-16}. Regenerate and
+commit the file with any change that is meant to alter a plan; run
+``--check`` after a change that is not, and it names every query whose
+plan moved.
 
 Usage:
   python tools/plan_digest.py               # regenerate PLAN_DIGESTS.json
@@ -28,7 +24,7 @@ Determinism: two back-to-back runs in fresh sessions must agree —
 ``tests/test_plan_digest_tool.py`` pins that on a sample; regenerate
 twice when in doubt. Queries ARE constructed, so index-building ones
 (KMeans fits, label propagation) execute real sf0.001 jobs here: the
-full run takes a few minutes, same order as a window pre-verify.
+full run takes a few minutes.
 """
 
 from __future__ import annotations
@@ -69,7 +65,7 @@ _NORMALIZERS = (
     # ordinal comes from a PER-SESSION counter, so it tracks how many
     # lambda-using queries were constructed EARLIER in the session —
     # i.e. pure registration order. Found in r11: reordering the
-    # registry window tuples flipped 36 transform/aggregate digests
+    # catalog flipped 36 transform/aggregate digests
     # with zero plan changes. Runs after the exprId strip (x_10#917 ->
     # x_10# -> x_#). Anchored to [xyz] (r11 ADVICE): PySpark IGNORES
     # the Python lambda's argument names and always renders the
@@ -81,7 +77,7 @@ _NORMALIZERS = (
     # CTE relation / recursion ids are a per-session counter too
     # (CTERelationDef 2 / CTERelationRef 2 / UnionLoop 2 /
     # UnionLoopRef 2) — same registration-order instability as the
-    # lambda ordinals, found in r12 when the rotation flipped
+    # lambda ordinals, found in r12 when a catalog reorder flipped
     # rel_window_ignore_nulls / rel_recursive_cte digests with zero
     # code changes.
     (re.compile(r"\b(CTERelationDef|CTERelationRef|UnionLoop|UnionLoopRef) \d+"), r"\1 "),
@@ -101,7 +97,7 @@ _NORMALIZERS = (
 def canonical_plan(df) -> str:
     # ANALYZED plan, not optimized: the analyzed tree is a direct,
     # deterministic translation of the authored DataFrame ops — exactly
-    # the "did this round's code change this query?" signal. Optimizer
+    # the "did this code change alter this query?" signal. Optimizer
     # output is NOT render-stable across sessions (e.g.
     # RewriteDistinctAggregates assigns gids in expression-hash order,
     # which permutes with the session's exprId counter — observed on
@@ -146,30 +142,16 @@ def generate(spark, names: list[str] | None = None) -> dict[str, str]:
     return out
 
 
-def normalizer_fingerprint() -> str:
-    """Hash of the normalizer set itself, stored under the reserved
-    ``__digest_tool__`` key. The round-11 lesson, part two: adding a
-    normalizer (the lambda-ordinal strip in ``_NORMALIZERS``)
-    re-baselines every
-    digest it touches — 47 names shifted with ZERO plan changes, same
-    mass-shift shape as fixture drift. Recording the tool version lets
-    the window planner refuse to trust a boundary-vs-boundary diff
-    that spans a tool change instead of presenting it as 47
-    independent plan edits."""
-    s = "\n".join(f"{p.pattern} -> {r}" for p, r in _NORMALIZERS)
-    return hashlib.sha256(s.encode()).hexdigest()[:16]
-
-
 def fixture_fingerprints(sf_dir: str = SF_DIR) -> dict[str, str]:
     """Arrow-schema hash per fixture table, stored under the reserved
     ``__fixtures__`` key. The round-11 lesson: the driver regenerates
     /root/testdata between rounds and a physical-type flip (events.ts
     nanos -> micros) changed 49 analyzed plans with ZERO code edits —
     indistinguishable from code churn in the name-level diff. With the
-    schema fingerprint recorded alongside the digests, the window
-    planner can attribute a mass digest shift to the fixture drift that
-    caused it (and name the drifted tables) instead of presenting it as
-    49 independent plan changes."""
+    schema fingerprint recorded alongside the digests, ``--check`` can
+    attribute a mass digest shift to the fixture drift that caused it
+    (and name the drifted tables) instead of presenting it as 49
+    independent plan changes."""
     import pyarrow.parquet as pq
 
     out = {}
@@ -235,7 +217,6 @@ def main() -> int:
         return 1 if (changed or added or removed or bad) else 0
     record = dict(sorted(fresh.items()))
     record["__fixtures__"] = fixture_fingerprints()
-    record["__digest_tool__"] = normalizer_fingerprint()
     with open(OUT, "w") as f:
         json.dump(record, f, indent=1, sort_keys=True)
         f.write("\n")

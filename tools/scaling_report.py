@@ -15,6 +15,10 @@ scans — taken from ``DataFrame.inputFiles()`` on the built plan, so an
 events-only query is not credited with lineitem's rows. Queries whose
 input is generated rather than read (empty ``inputFiles``) show "—".
 
+Timing follows bench.py's protocol (``bench.warm_up`` then
+``bench.noop_pass``), so a cell is directly comparable to the bench
+build+exec split of the same query.
+
 Usage: python tools/scaling_report.py [n_repeats]
 """
 
@@ -22,10 +26,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import noop_pass, warm_up
 from real_time_predictive_maintenance_data_pipeline_spark.plans import all_queries
 from real_time_predictive_maintenance_data_pipeline_spark.session import get_spark
 
@@ -98,15 +102,12 @@ def _scan_tables(build, spark, sf_dir: str, table_rows: dict[str, int]) -> int |
 
 
 def _measure(
-    spark, qs, table_rows, n_repeats: int, clear_cache: bool = False
+    spark, qs, table_rows, n_repeats: int
 ) -> tuple[dict[str, list[float]], dict[str, int | None]]:
-    """(times per SF, scanned-rows-at-sf0.1) for a query dict. Warm the
-    JVM/codegen caches at sf0.001 first so those timings aren't
-    first-run compilation artifacts."""
-    for q in qs.values():
-        _force(q.spark(spark, SFS[0]))
-        if clear_cache:
-            spark.catalog.clearCache()
+    """(best build+exec seconds per SF, scanned-rows-at-sf0.1) for a
+    query dict, under bench.py's protocol: ``warm_up`` once (its plan
+    warm runs at sf0.001), then ``n_repeats`` noop passes per SF."""
+    warm_up(spark, SFS[-1], qs)
 
     # Per-query scan footprint at sf0.1 (plan-derived, no execution).
     in_rows = {
@@ -116,18 +117,13 @@ def _measure(
 
     times: dict[str, list[float]] = {n: [] for n in qs}
     for sf in SFS:
-        for n, q in qs.items():
-            samples = []
-            for _ in range(n_repeats):
-                samples.append(_timed(q.spark, spark, sf))
-                if clear_cache:
-                    # "caches"-tagged plans persist intermediates; drop
-                    # them between repeats so each sample pays the full
-                    # cost and storage doesn't leak across queries
-                    spark.catalog.clearCache()
-            best = min(samples)
-            times[n].append(best)
-            print(f"{sf.rsplit('/', 1)[1]} {n}: {best:.3f}s", flush=True)
+        best: dict[str, float] = {}
+        for _ in range(n_repeats):
+            for n, (b, e) in noop_pass(spark, sf, qs).items():
+                best[n] = min(best.get(n, b + e), b + e)
+        for n in sorted(qs):
+            times[n].append(best[n])
+            print(f"{sf.rsplit('/', 1)[1]} {n}: {best[n]:.3f}s", flush=True)
     return times, in_rows
 
 
@@ -161,15 +157,13 @@ def main() -> int:
     sf_rows = {sf: sum(table_rows[sf].values()) for sf in SFS}
 
     times, in_rows = _measure(spark, qs, table_rows, n_repeats)
-    ann_times, ann_rows = _measure(
-        spark, qs_ann, table_rows, n_repeats, clear_cache=True
-    )
+    ann_times, ann_rows = _measure(spark, qs_ann, table_rows, n_repeats)
 
     lines = [
         "# SCALING — measured growth across a 100× data span",
         "",
         "Auto-generated by `python tools/scaling_report.py` (best of "
-        f"{n_repeats} per cell, local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]).",
+        f"{n_repeats} per cell, {spark.sparkContext.master}).",
         "",
         "t = overhead + c·rows for a linear operator, and per-query fixed",
         "overhead here is ~0.2–0.5 s, so across a 10× data step: ratio ≈ 1",
@@ -195,9 +189,7 @@ def main() -> int:
         "",
         "## ANN / PQ family (outside the frozen bench headline set)",
         "",
-        "Same method (best of the same repeat count; `clearCache` after",
-        "every run — several of these persist KMeans/codebook",
-        "intermediates, so each sample pays the full cost). These are",
+        "Same method and repeat count as the table above. These are",
         "the operators whose 100 TB claim rests on bucketed candidate",
         "generation and bounded driver collects; the ratios below are",
         "the measured check that nothing in the family grows",
@@ -230,19 +222,6 @@ def main() -> int:
             fh.write(notes)
     print("wrote SCALING.md")
     return 0
-
-
-def _force(df) -> None:
-    """Execute the FULL plan via the noop sink — count() alone lets
-    Catalyst prune exactly the compute being measured (same forcing
-    bench.py uses)."""
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _timed(fn, spark, sf: str) -> float:
-    t0 = time.time()
-    _force(fn(spark, sf))
-    return time.time() - t0
 
 
 if __name__ == "__main__":

@@ -1,14 +1,15 @@
 """Byte-strict oracle sweep over the WHOLE catalog (or a named subset)
-at any scale factor — the companion to tools/preverify_window.py, which
-only replays the driver's 50-query window.
+at any scale factor, with the comparison tests/test_oracle_parity.py
+uses.
 
 Why this exists: float-parity hazards can be scale-dependent (a raw
 double sum only crosses 2^53, lands on an exact .xxxx5, or rounds to
 -0.0 at some data volume). The round-6 byte-strict sf0.1 sweep caught
 `rel_experiment_mde` diverging by 2 ulps only at sf0.1 — invisible at
 sf0.001/sf0.01 and to the old 6-dp mirror. Run this at sf0.1 after any
-float-sensitive change, and over future driver-window names before the
-driver does.
+float-sensitive change. The driver checks the first 50 names of
+``all_queries()`` at sf0.01 first; sweep those names at sf0.01 to
+check them beforehand.
 
 Usage:
     python tools/sweep_catalog.py [sf_dir] [name ...]
@@ -65,6 +66,12 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 — report and continue
             failed.append(name)
             status = f"FAIL: {str(e)[:300]}"
+        finally:
+            # "caches"-tagged plans persist intermediates that outlive
+            # the returned DataFrame; drop them so a whole-catalog sweep
+            # doesn't pile them up in executor storage
+            if "caches" in q.tags:
+                spark.catalog.clearCache()
         print(f"{name}: {status}", flush=True)
 
     print(
