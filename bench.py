@@ -30,40 +30,6 @@ from real_time_predictive_maintenance_data_pipeline_spark.plans import all_queri
 from real_time_predictive_maintenance_data_pipeline_spark.session import get_spark
 
 
-def calibrate(spark) -> dict[str, float]:
-    """Fixed compute-only micro-benchmark, emitted with every bench run
-    (r13 verdict task 1): two consecutive rounds spent triage deciding
-    whether an inflated total was a host class or a plan regression.
-    These two numbers answer that mechanically — they exercise no
-    engine code and no IO, so they move ONLY with the host.
-
-    - ``jvm_sec``: whole-stage-codegen aggregate over a generated
-      range, 32 partitions — scales with all-core JVM throughput
-      (contention from a loaded host inflates it proportionally).
-    - ``py_sec``: single-threaded pure-Python integer loop — scales
-      with single-core speed/steal, the axis that dominates driver-side
-      queries.
-
-    Best-of-3 each (the same noise-rejection as the query loop).
-    Compare CALIBRATED RATIOS across rounds: total/jvm_sec is
-    host-class-invariant where raw seconds are not (SCALING.md
-    "bench band, calibrated" table)."""
-    jvm = py = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 1_000_000_000, 1, 32).selectExpr(
-            "sum(id % 1000003)"
-        ).collect()
-        jvm = min(jvm, time.perf_counter() - t0)
-    for _ in range(3):
-        t0 = time.perf_counter()
-        x = 0
-        for i in range(4_000_000):
-            x = (x * 1103515245 + i) & 0xFFFFFFFF
-        py = min(py, time.perf_counter() - t0)
-    return {"jvm_sec": round(jvm, 3), "py_sec": round(py, 3)}
-
-
 def warm_up(spark, sf_dir: str, queries) -> None:
     """Bring the session to steady state before timed ``noop_pass``es
     over ``queries`` at ``sf_dir``, so they measure the plans, not
@@ -201,11 +167,6 @@ def main() -> None:
 
     warm_up(spark, sf_dir, queries)
 
-    # Calibrate BEFORE and AFTER the timed loop: two snapshots bound
-    # the host class the queries actually ran under (a mid-run load
-    # spike shows as calib_end >> calib_start).
-    calib_start = calibrate(spark)
-
     # Repeat the timed loop n>=3 times: the FIRST pass is the headline
     # (comparable to prior rounds, which timed a single pass); the
     # per-query MIN across passes is the quiet-machine floor that
@@ -265,9 +226,7 @@ def main() -> None:
         load_end = round(os.getloadavg()[0], 2)
     except OSError:  # pragma: no cover
         load_end = -1.0
-    calib_end = calibrate(spark)
     total_best = round(sum(best.values()), 3)
-    calib_jvm = min(calib_start["jvm_sec"], calib_end["jvm_sec"])
     print(
         json.dumps(
             {
@@ -292,15 +251,6 @@ def main() -> None:
                 "queries_mrg_exec": mrg_exec,
                 "value_mrg_exec": round(sum(mrg_exec.values()), 3),
                 **({} if mrg_error is None else {"mrg_exec_error": mrg_error}),
-                "calib": {
-                    "start": calib_start,
-                    "end": calib_end,
-                    # the cross-round comparison number: headline
-                    # best-of over the host's own compute unit
-                    "ratio_best_vs_jvm": round(total_best / calib_jvm, 1)
-                    if calib_jvm > 0
-                    else -1.0,
-                },
                 "host": {
                     "cpus": os.cpu_count(),
                     "load_1m_start": _LOAD_START,

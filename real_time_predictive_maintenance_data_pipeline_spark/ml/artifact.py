@@ -135,10 +135,11 @@ def trainer_key(prefix: str, trainer: str, fp: str) -> str:
     return f"{prefix}_t{TRAINER_VERSIONS[trainer]}_{fp}"
 
 
-#: Per-process memo of LOADED pinned artifacts keyed by file stat —
-#: see ``pinned``. Metadata-invalidated, never persisted, read-only
-#: contract on the stored objects.
-_PINNED_LOAD_MEMO: dict[tuple, Any] = {}
+#: Per-process memo of LOADED pinned artifacts: path → ((mtime_ns,
+#: size), object), only the latest stat per path — see ``pinned``.
+#: Metadata-invalidated, never persisted, read-only contract on the
+#: stored objects.
+_PINNED_LOAD_MEMO: dict[str, tuple[tuple[int, int], Any]] = {}
 
 
 def pinned(key: str, train) -> Any:
@@ -166,26 +167,28 @@ def pinned(key: str, train) -> Any:
     serve junk to every later query of the same fingerprint, long
     after the empty-input bug is fixed.
 
-    Loads are memoized per process keyed by (path, mtime_ns, size)
-    (r17, same metadata-stat pattern as the parquet schema memo): the
-    ANN queries re-enter ``pinned`` on every invocation and re-paid the
-    file read + deserialize each time. Honest local measurement: these
-    pins are ~10 KB and joblib loads them in ~0.05-0.09 ms, so the
-    local saving is noise — the point is structural (a real deployment
-    keeps pins on an object store, where each skipped load is a GET +
-    deserialize per query). A rewritten pin (new mtime/size) re-loads;
-    nothing persists across processes.
+    Loads are memoized per process by path, holding the (mtime_ns,
+    size) they were loaded at (r17, same metadata-stat pattern as the
+    parquet schema memo): the ANN queries re-enter ``pinned`` on every
+    invocation and re-paid the file read + deserialize each time.
+    Honest local measurement: these pins are ~10 KB and joblib loads
+    them in ~0.05-0.09 ms, so the local saving is noise — the point is
+    structural (a real deployment keeps pins on an object store, where
+    each skipped load is a GET + deserialize per query). A rewritten
+    pin (new mtime/size) re-loads and replaces its entry, so the memo
+    holds one entry per pin; nothing persists across processes.
     Pinned artifacts are READ-ONLY by contract — callers build their
     numpy/broadcast structures from the returned lists and must not
     mutate them (the memo hands every caller the same object)."""
     path = os.path.join(artifact_dir(), f"{key}.bin")
     if os.path.exists(path):
         st = os.stat(path)
-        mkey = (path, st.st_mtime_ns, st.st_size)
-        obj = _PINNED_LOAD_MEMO.get(mkey)
-        if obj is None:
-            obj = load_artifact(path)
-            _PINNED_LOAD_MEMO[mkey] = obj
+        stamp = (st.st_mtime_ns, st.st_size)
+        hit = _PINNED_LOAD_MEMO.get(path)
+        if hit is not None and hit[0] == stamp:
+            return hit[1]
+        obj = load_artifact(path)
+        _PINNED_LOAD_MEMO[path] = (stamp, obj)
         return obj
     obj = train()
     try:
@@ -200,7 +203,7 @@ def pinned(key: str, train) -> Any:
         )
     save_artifact(obj, path)
     st = os.stat(path)
-    _PINNED_LOAD_MEMO[(path, st.st_mtime_ns, st.st_size)] = obj
+    _PINNED_LOAD_MEMO[path] = ((st.st_mtime_ns, st.st_size), obj)
     return obj
 
 

@@ -168,7 +168,8 @@ def ngram_jaccard_pairs(
         # concurrent jobs — with d persisted but not yet computed, their
         # tasks race on the cache-block write lock and each recomputes
         # the whole tokenize+group pipeline serially behind it (measured
-        # 40 s vs 7 s on a 7 000-doc corpus, tools/bench_max_bucket.py).
+        # 40 s vs 7 s on a 7 000-doc corpus, SCALING.md "r12:
+        # `max_bucket` hot-bucket cap quantified").
         # One count() here fills the cache once; every future then
         # block-reads. Only the capped path pays this (and it needs d
         # materialized anyway); default None keeps the plan fully lazy.

@@ -1923,11 +1923,11 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall ≥ 0.10 — measured mean 0.440 / 0.420 / 0.180 at
     sf0.001/0.01/0.1. The floor LOOKS low because the fixture vectors
     are near-random (no cluster structure for codes to exploit — the
-    documented PQ worst case, see tools/bench_ann_recall.py); random
-    top-10 overlap at sf0.1 would be 0.005, so the gate still sits
-    20-36× above chance, and the clustered-corpus recall the same
-    kernels reach (0.33-0.43 with OPQ) is pinned in
-    tests/test_similarity.py."""
+    documented PQ worst case, see SCALING.md "r13: ANN recall@10 vs
+    exact ground truth at sf0.1"); random top-10 overlap at sf0.1
+    would be 0.005, so the gate still sits 20-36× above chance, and
+    the clustered-corpus recall the same kernels reach (0.33-0.43 with
+    OPQ) is pinned in tests/test_similarity.py."""
     e = _embs(spark, sf_dir)
     fp = ART.dataset_fingerprint(e, "vec_id", "embedding")
     book_rows = ART.pinned(

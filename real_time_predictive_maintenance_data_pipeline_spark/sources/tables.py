@@ -76,18 +76,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size, spark.conf.get(_NANOS_CONF, "false"))
         if os.path.isdir(path):
-            # Directory-layout table (r17 hardening, ADVICE r16): an
-            # in-place part-file rewrite need not touch the directory's
-            # own mtime/size, so fold every child's (name, mtime, size)
-            # into the key — a stale schema can then never be served
-            # for a re-written part file. Fixtures are single files
-            # today; this keeps the memo correct if that ever changes.
-            key = key + tuple(
-                sorted(
-                    (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                    for e in os.scandir(path)
-                )
-            )
+            # Directory-layout table: an in-place part-file rewrite need
+            # not touch any directory's own mtime/size, so fold every
+            # file's (relative path, mtime, size) into the key, at any
+            # depth (hive partitions nest part files under ``k=v/``) —
+            # a stale schema can then never be served for a re-written
+            # part file. Fixtures are single files today; this keeps
+            # the memo correct if that ever changes.
+            files = []
+            for root, _, names in os.walk(path):
+                for f in names:
+                    fp = os.path.join(root, f)
+                    fst = os.stat(fp)
+                    files.append(
+                        (os.path.relpath(fp, path), fst.st_mtime_ns, fst.st_size)
+                    )
+            key = key + tuple(sorted(files))
     except OSError:
         key = None  # let spark.read surface the missing-path error
     schema = _SCHEMA_MEMO.get(key) if key is not None else None

@@ -1,33 +1,21 @@
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
-#: Calibrated suite-time budget (r15, r14 verdict task 5): raw minutes
-#: re-litigate every host-class change, so the budget is a RATIO to the
-#: same compute-only probe the bench emits (bench.calibrate's jvm leg —
-#: moves only with the host, never with engine code). Band recorded in
-#: SCALING.md ("suite budget, calibrated"); the probe runs once per
-#: full-suite session (gated on collected-test count so tiny dev loops
-#: don't pay it; force with RTPMDP_SUITE_CALIB=1).
-_CALIB: dict[str, float] = {}
-_FULL_SUITE_MIN_TESTS = 200
-
 
 def pytest_configure(config):
     config.addinivalue_line(
         "markers", "slow: multi-minute end-to-end subprocess smoke"
     )
-    config._suite_t0 = time.perf_counter()
 
 
 @pytest.fixture(scope="session")
-def spark(request):
+def spark():
     from real_time_predictive_maintenance_data_pipeline_spark.session import get_spark
 
     # local[8] is the measured sweet spot (r16 suite diet): a local[16]
@@ -37,28 +25,5 @@ def spark(request):
     # their poisoned fixtures), full-suite 32:47 vs ~29 at local[8].
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark("rtpmdp-tests")
-    want_calib = os.environ.get("RTPMDP_SUITE_CALIB") == "1" or (
-        getattr(request.session, "testscollected", 0) >= _FULL_SUITE_MIN_TESTS
-    )
-    if want_calib and not _CALIB:
-        import sys
-
-        sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-        from bench import calibrate
-
-        _CALIB.update(calibrate(s))
     yield s
     s.stop()
-
-
-def pytest_sessionfinish(session, exitstatus):
-    dt = time.perf_counter() - getattr(
-        session.config, "_suite_t0", time.perf_counter()
-    )
-    if _CALIB:
-        ratio = dt / _CALIB["jvm_sec"]
-        print(
-            f"\nSUITE_CALIB suite_sec={dt:.1f} jvm_sec={_CALIB['jvm_sec']} "
-            f"py_sec={_CALIB['py_sec']} suite_over_jvm={ratio:.0f} "
-            "(budget band: SCALING.md 'suite budget, calibrated')"
-        )

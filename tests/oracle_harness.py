@@ -50,6 +50,38 @@ def _canon(v: Any) -> Any:
     return v
 
 
+def canonical_multiset(df) -> list[tuple]:
+    """``df``'s rows as a sorted multiset of ``_canon`` tuples, columns
+    in case-insensitive name order: two results are equal as multisets
+    iff these lists are equal (floats compared by exact IEEE-754 bytes)."""
+    cols = df.columns
+    idx = [cols.index(c) for c in sorted(cols, key=str.lower)]
+    rows = [tuple(_canon(tuple(r)[i]) for i in idx) for r in df.collect()]
+    return sorted(rows, key=lambda t: tuple(str(x) for x in t))
+
+
+def first_diff(a: list[tuple], b: list[tuple]) -> str:
+    """The first difference between two ``canonical_multiset`` lists."""
+    if len(a) != len(b):
+        return f"row count {len(a)} vs {len(b)}"
+    for ra, rb in zip(a, b):
+        if ra != rb:
+            return f"{ra!r} vs {rb!r}"
+    return "?"
+
+
+def layout_audited(q) -> bool:
+    """Whether catalog entry ``q`` belongs in the layout-determinism
+    audit (pristine vs shuffled fixtures): every oracled query except
+    the telemetry eager-io entries. Those generate their own seeded/wire
+    input and never read sf_dir, so the comparison would diff two
+    independent GENERATION runs (and for the MQTT entry two wire
+    sessions, where QoS-1 redelivery is at-least-once by contract), not
+    two layouts. Their parity gate is the landed-bytes oracle. The src_*
+    eager-io roundtrips DO read the fixtures and stay in scope."""
+    return bool(q.oracle) and not ("eager-io" in q.tags and "telemetry" in q.tags)
+
+
 # The driver's value hash is computed over pandas frames and is
 # DTYPE-SENSITIVE: equal values in an int64 vs a float64 column hash
 # differently (r03 `rel_agg_bool_bit`: DuckDB count_if returns HUGEINT,

@@ -111,3 +111,22 @@ def test_pinned_refuses_degenerate_artifact(tmp_path, monkeypatch):
     assert ART.pinned("ok_t1_n1h1", lambda: [1, 2]) == [1, 2]
     assert (tmp_path / "ok_t1_n1h1.bin").exists()
     assert ART.pinned("ok_t1_n1h1", lambda: [9]) == [1, 2]  # served, not retrained
+
+
+def test_pinned_memo_keeps_latest_load_per_path(tmp_path, monkeypatch):
+    """The load memo holds one entry per pin path: rewriting a pin
+    replaces its entry rather than adding one per (mtime, size) ever
+    seen, and ``pinned`` serves the rewritten object."""
+    import os
+
+    monkeypatch.setenv("RTPMDP_ARTIFACT_DIR", str(tmp_path))
+    monkeypatch.setattr(ART, "_PINNED_LOAD_MEMO", {})
+    key = "memo_t1_n1h1"
+    path = str(tmp_path / f"{key}.bin")
+    assert ART.pinned(key, lambda: [0]) == [0]
+    for gen, obj in enumerate(([1, 1], [2, 2, 2]), start=1):
+        ART.save_artifact(obj, path)
+        # a distinct mtime even on coarse filesystem clocks
+        os.utime(path, ns=(gen * 10**9, gen * 10**9))
+        assert ART.pinned(key, lambda: [9]) == obj
+    assert len(ART._PINNED_LOAD_MEMO) == 1

@@ -29,25 +29,13 @@ import pytest
 from real_time_predictive_maintenance_data_pipeline_spark.plans import all_queries
 
 from .conftest import SF_SMOKE
+from .oracle_harness import canonical_multiset, first_diff, layout_audited
 from .shuffle_fixture import shuffle_tables
 
 QUERIES = all_queries()
-# Scope: the oracled queries among the first 50 registered ones.
-# The telemetry eager-io entries are excluded BY SCOPE (r15): they
-# generate their own seeded/wire input and never read sf_dir, so
-# "pristine vs shuffled fixtures" compares two independent GENERATION
-# runs, not two layouts — and for the MQTT entry a QoS-1 retransmit
-# (at-least-once by contract) would byte-diff them spuriously. Their
-# parity gate is the landed-bytes oracle instead. The src_* eager-io
-# roundtrips DO read the fixtures and stay in scope.
-WINDOW_ORACLED = [
-    n
-    for n in list(QUERIES)[:50]
-    if QUERIES[n].oracle
-    and not (
-        "eager-io" in QUERIES[n].tags and "telemetry" in QUERIES[n].tags
-    )
-]
+# Scope: the audited queries (``layout_audited``: oracled, minus the
+# telemetry eager-io entries) among the first 50 registered ones.
+WINDOW_ORACLED = [n for n in list(QUERIES)[:50] if layout_audited(QUERIES[n])]
 
 
 @pytest.fixture(scope="module")
@@ -57,29 +45,16 @@ def shuffled_sf_dir(tmp_path_factory):
     return d
 
 
-def _canonical_multiset(df):
-    from .oracle_harness import _canon
-
-    cols = df.columns
-    idx = [cols.index(c) for c in sorted(cols, key=str.lower)]
-    rows = [tuple(_canon(tuple(r)[i]) for i in idx) for r in df.collect()]
-    return sorted(rows, key=lambda t: tuple(str(x) for x in t))
-
-
 @pytest.mark.slow
 def test_window_queries_are_layout_deterministic(spark, shuffled_sf_dir):
     bad = {}
     for name in WINDOW_ORACLED:
         q = QUERIES[name]
         try:
-            a = _canonical_multiset(q.spark(spark, SF_SMOKE))
-            b = _canonical_multiset(q.spark(spark, shuffled_sf_dir))
+            a = canonical_multiset(q.spark(spark, SF_SMOKE))
+            b = canonical_multiset(q.spark(spark, shuffled_sf_dir))
             if a != b:
-                diff = next(
-                    (f"{ra!r} vs {rb!r}" for ra, rb in zip(a, b) if ra != rb),
-                    f"row count {len(a)} vs {len(b)}",
-                )
-                bad[name] = diff
+                bad[name] = first_diff(a, b)
         except Exception as exc:  # noqa: BLE001 — collect, assert once
             bad[name] = f"{type(exc).__name__}: {str(exc).splitlines()[0][:160]}"
         finally:
@@ -109,11 +84,8 @@ def test_trained_ann_entries_are_layout_deterministic(spark, shuffled_sf_dir):
     bad = {}
     for name in TRAINED_ANN:
         q = QUERIES[name]
-        a = _canonical_multiset(q.spark(spark, SF_SMOKE))
-        b = _canonical_multiset(q.spark(spark, shuffled_sf_dir))
+        a = canonical_multiset(q.spark(spark, SF_SMOKE))
+        b = canonical_multiset(q.spark(spark, shuffled_sf_dir))
         if a != b:
-            bad[name] = next(
-                (f"{ra!r} vs {rb!r}" for ra, rb in zip(a, b) if ra != rb),
-                f"row count {len(a)} vs {len(b)}",
-            )
+            bad[name] = first_diff(a, b)
     assert not bad, f"layout-dependent trained-ANN entries: {bad}"

@@ -458,8 +458,8 @@ def test_clustered_recall_floors(spark):
     sf0.1 fixture's near-random vectors are a recall FLOOR with no
     neighborhood structure; this is the encoder-like counterpart —
     ``clustered_embeddings`` (2000 x 64 mixture-of-Gaussians, 20
-    clusters, noise 0.25). Measured r14 (tools/bench_ann_recall.py
-    --clustered):
+    clusters, noise 0.25). Measured r14 (SCALING.md "r14: ANN
+    recall@10 on a CLUSTERED corpus"):
 
     - IVF is effectively EXACT at nprobe=2/16 (recall 1.000): a
       query's neighbors share its cluster, and KMeans cells align with

@@ -158,3 +158,37 @@ def test_load_table_schema_memo_invalidates_on_dir_part_rewrite(spark, tmp_path)
         .collect()
     )
     assert [r.us for r in rows] == _US_TRUNC
+
+
+def test_load_table_schema_memo_sees_nested_hive_part_rewrite(spark, tmp_path):
+    """A hive-partitioned table nests its part files under ``k=v/``
+    directories. Rewriting such a part file in place changes neither
+    the table directory nor any of its direct children, so the memo key
+    must cover every file at any depth: the new schema is re-inferred."""
+    import time as _time
+
+    tbl = tmp_path / "region.parquet"
+    part = tbl / "r_bucket=0"
+    part.mkdir(parents=True)
+
+    def write_part(cols):
+        pq.write_table(pa.table(cols), str(part / "part-00000.parquet"))
+
+    base = {
+        "r_regionkey": pa.array([0, 1], pa.int64()),
+        "r_name": pa.array(["AFRICA", "AMERICA"]),
+    }
+    write_part(base)
+    first = load_table(spark, str(tmp_path), "region")
+    assert sorted(first.columns) == ["r_bucket", "r_name", "r_regionkey"]
+
+    _time.sleep(0.01)
+    write_part({**base, "r_comment": pa.array(["x", "y"])})
+    rewritten = load_table(spark, str(tmp_path), "region")
+    assert sorted(rewritten.columns) == [
+        "r_bucket",
+        "r_comment",
+        "r_name",
+        "r_regionkey",
+    ]
+    assert sorted(r.r_comment for r in rewritten.collect()) == ["x", "y"]

@@ -40,26 +40,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from real_time_predictive_maintenance_data_pipeline_spark.plans import all_queries
 from real_time_predictive_maintenance_data_pipeline_spark.session import get_spark
-from tests.oracle_harness import _canon
+from tests.oracle_harness import canonical_multiset, first_diff, layout_audited
 from tests.shuffle_fixture import shuffle_tables
-
-
-def canonical_multiset(df) -> list[tuple]:
-    cols = df.columns
-    idx = [cols.index(c) for c in sorted(cols, key=str.lower)]
-    rows = [
-        tuple(_canon(tuple(r)[i]) for i in idx) for r in df.collect()
-    ]
-    return sorted(rows, key=lambda t: tuple(str(x) for x in t))
-
-
-def first_diff(a: list[tuple], b: list[tuple]) -> str:
-    if len(a) != len(b):
-        return f"row count {len(a)} vs {len(b)}"
-    for ra, rb in zip(a, b):
-        if ra != rb:
-            return f"{ra!r} vs {rb!r}"
-    return "?"
 
 
 def main() -> int:
@@ -75,21 +57,9 @@ def main() -> int:
     if names:
         picked = {n: queries[n] for n in names}
     else:
-        # The telemetry eager-io entries are out of scope by default
-        # (r15): they generate their own seeded/wire input and never
-        # read sf_dir, so the pristine-vs-shuffled comparison would
-        # diff two independent GENERATION runs (and for the MQTT entry
-        # two wire sessions, where QoS-1 redelivery is at-least-once
-        # by contract), not two layouts. Their parity gate is the
-        # landed-bytes oracle. The src_* eager-io roundtrips DO read
-        # the fixtures and stay in scope. Pass names explicitly to
-        # force anything.
-        picked = {
-            n: q
-            for n, q in queries.items()
-            if q.oracle
-            and not ("eager-io" in q.tags and "telemetry" in q.tags)
-        }
+        # Out-of-scope entries (see ``layout_audited``) are skipped by
+        # default; pass names explicitly to force anything.
+        picked = {n: q for n, q in queries.items() if layout_audited(q)}
 
     spark = get_spark("audit-determinism")
     spark.sparkContext.setLogLevel("ERROR")
