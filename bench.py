@@ -2,7 +2,7 @@
 
 Runs the bench-tagged headline queries from the catalog at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[<host cores>]`` and prints ONE JSON line:
 ``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
 
 Each query is forced through the noop sink so the full plan executes
@@ -167,14 +167,13 @@ def main() -> None:
 
     warm_up(spark, sf_dir, queries)
 
-    # Repeat the timed loop n>=3 times: the FIRST pass is the headline
+    # Repeat the timed loop 3 times: the FIRST pass is the headline
     # (comparable to prior rounds, which timed a single pass); the
     # per-query MIN across passes is the quiet-machine floor that
     # separates environment drift (host page-cache drops, CPU/IO
     # throttling — measured 1.3-4.7x on plan-identical queries) from a
-    # real plan regression. Override with SPARK_GRAFT_BENCH_REPEAT=1 for
-    # a quick iteration loop.
-    repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3")))
+    # real plan regression.
+    repeat = 3
     timings: dict[str, float] = {}
     best: dict[str, float] = {}
     # Per-query build (plan construction + Catalyst analysis,
@@ -252,7 +251,7 @@ def main() -> None:
                 "value_mrg_exec": round(sum(mrg_exec.values()), 3),
                 **({} if mrg_error is None else {"mrg_exec_error": mrg_error}),
                 "host": {
-                    "cpus": os.cpu_count(),
+                    "cpus": spark.sparkContext.defaultParallelism,
                     "load_1m_start": _LOAD_START,
                     "load_1m_end": load_end,
                 },

@@ -73,7 +73,7 @@ from real_time_predictive_maintenance_data_pipeline_spark.streaming import (
 
 
 def main(n_records: int = 200, tls: bool = False) -> None:
-    spark = get_spark("rtpmdp-mqtt-demo", cpus="8")
+    spark = get_spark("rtpmdp-mqtt-demo")
     spark.sparkContext.setLogLevel("ERROR")
     register_telemetry_source(spark)
     work = tempfile.mkdtemp(prefix="rtpmdp_mqtt_")

@@ -47,7 +47,7 @@ from real_time_predictive_maintenance_data_pipeline_spark.streaming import (
 
 
 def main(run_seconds: int = 15, buffered: bool = False) -> None:
-    spark = get_spark("rtpmdp-demo", cpus="8")
+    spark = get_spark("rtpmdp-demo")
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="rtpmdp_demo_")
 

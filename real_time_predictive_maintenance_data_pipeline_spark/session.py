@@ -1,12 +1,15 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads),
-but every knob here is chosen for the 100 TB / 1000-executor target:
+Local sessions run one thread per core this process may use
+(``HOST_CORES``), but every knob here is chosen for the 100 TB /
+1000-executor target:
 
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   dynamic broadcast-join demotion/promotion).
-- ``spark.sql.shuffle.partitions`` sized for the local harness; on a real
-  cluster AQE's coalescing makes the initial number a ceiling, not a tune.
+- ``spark.sql.shuffle.partitions`` equals the session's core count; on a
+  real cluster AQE's coalescing makes the initial number a ceiling, not a
+  tune. Stateful streaming queries keep the partition count recorded in
+  their checkpoint, so a new count applies only to new checkpoints.
 - Arrow on for every pandas interchange (Pandas UDFs, ``mapInPandas``).
 - Session timezone pinned UTC — the reference's historical table is
   tz-aware UTC (generate_historical_data.py:38-40) and its stream carries
@@ -19,17 +22,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Cores this process may run on (what ``nproc`` prints): the one
+# parallelism setting every session is sized from.
+HOST_CORES = len(os.sched_getaffinity(0))
 
-def spark_confs() -> dict[str, str]:
-    """Engine configuration, applied to the builder or an existing session."""
+_BLAS_THREAD_VARS = ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS")
+
+
+def spark_confs(cores: int) -> dict[str, str]:
+    """Engine configuration for a session with ``cores`` task slots,
+    applied to the builder or an existing session."""
     return {
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.shuffle.partitions": os.environ.get(
-            "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
-        ),
+        "spark.sql.shuffle.partitions": str(cores),
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # Parquet scans: vectorized reader + pushdown are defaults; keep
@@ -57,6 +65,13 @@ def spark_confs() -> dict[str, str]:
         # results), costs ~10 KB/entry, and any production driver or
         # executor serving repeated plan families wants the same.
         "spark.sql.codegen.cache.maxEntries": "5000",
+        # Single-threaded BLAS in Python workers (r15): Spark TASKS are
+        # the parallelism unit — numpy inside a pandas UDF otherwise
+        # spawns an all-core OpenBLAS/OMP pool PER concurrent worker
+        # (measured: the 16-way parallel PQ subspace fit inflated 6 s of
+        # math to ~300 s of thread-thrash on local[32]). Same rule any
+        # multi-core executor needs in production.
+        **{f"spark.executorEnv.{var}": "1" for var in _BLAS_THREAD_VARS},
     }
 
 
@@ -75,46 +90,41 @@ def streaming_state_confs() -> dict[str, str]:
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         ),
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-        # Single-threaded BLAS in Python workers (r15): Spark TASKS are
-        # the parallelism unit — numpy inside a pandas UDF otherwise
-        # spawns an all-core OpenBLAS/OMP pool PER concurrent worker
-        # (measured: the 16-way parallel PQ subspace fit inflated 6 s of
-        # math to ~300 s of thread-thrash on local[32]). Same rule any
-        # multi-core executor needs in production.
-        "spark.executorEnv.OMP_NUM_THREADS": "1",
-        "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
-        "spark.executorEnv.MKL_NUM_THREADS": "1",
     }
 
 
-def get_spark(app_name: str = "rtpmdp-engine", cpus: str | None = None) -> SparkSession:
-    """Build (or fetch) the tuned local session.
+def get_spark(
+    app_name: str = "rtpmdp-engine", cpus: int | str | None = None
+) -> SparkSession:
+    """Build (or fetch) the tuned ``local[cpus]`` session; ``cpus``
+    defaults to ``HOST_CORES``.
 
     The driver may hand us its own session; query functions never call this —
     only tests and ``bench.py`` do.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = int(cpus or HOST_CORES)
     # Local-mode twin of the executorEnv BLAS caps in spark_confs():
     # python workers fork from the in-process JVM, which inherits THIS
     # process's env — executorEnv alone doesn't reach an already-running
     # local executor. Must be set before any worker imports numpy.
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
+    for var in _BLAS_THREAD_VARS:
         os.environ.setdefault(var, "1")
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in spark_confs().items():
+    for k, v in spark_confs(cores).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
 def apply_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine confs to a session we didn't build
-    (e.g. the driver's). Static confs (driver memory) are skipped."""
-    for k, v in spark_confs().items():
+    (e.g. the driver's), sized to its own parallelism. Static confs
+    (driver memory) are skipped."""
+    for k, v in spark_confs(spark.sparkContext.defaultParallelism).items():
         try:
             spark.conf.set(k, v)
         except Exception:

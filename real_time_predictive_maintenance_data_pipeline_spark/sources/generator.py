@@ -22,7 +22,7 @@ fully distributed, no driver-side data generation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -62,6 +62,24 @@ def hash_uniform(col, salt: int):
     )
 
 
+def simulator_readings(rid: Column, seed: int) -> tuple[Column, Column]:
+    """The simulator's per-row draw program (O2, O3): ``temperature``
+    and ``vibration`` columns for row-id column ``rid``.
+
+    Temp U(65,70) °C and vib U(1.2,1.5) mm/s, plus a Bernoulli(0.10)
+    anomaly adding +15 °C / +2 mm/s. Draws are hash-keyed on the row id
+    (see ``hash_uniform``), so the anomaly branch applies to temperature
+    AND vibration atomically, and a replayed row redraws identically.
+    """
+    is_anom = hash_uniform(rid, seed) < ANOMALY_PROBABILITY
+    temp = hash_uniform(rid, seed + 1) * (TEMP_MAX - TEMP_MIN) + TEMP_MIN
+    vib = hash_uniform(rid, seed + 2) * (VIB_MAX - VIB_MIN) + VIB_MIN
+    return (
+        F.when(is_anom, temp + ANOMALY_TEMP_DELTA).otherwise(temp).alias("temperature"),
+        F.when(is_anom, vib + ANOMALY_VIB_DELTA).otherwise(vib).alias("vibration"),
+    )
+
+
 def stream_telemetry_batch(
     spark: SparkSession,
     n: int = 1000,
@@ -72,18 +90,12 @@ def stream_telemetry_batch(
 
     Columns: machineId, temperature, vibration, timestamp (Unix seconds,
     LongType — IoTSimulator.java:182 uses currentTimeMillis()/1000).
-    Draws are hash-keyed on the row id (see ``hash_uniform``), so the
-    anomaly branch applies to temperature AND vibration atomically.
+    Readings come from ``simulator_readings`` keyed on the row id.
     """
     base = spark.range(n)  # distributed id grid — no driver loop
-    rid = F.col("id")
-    is_anom = hash_uniform(rid, seed) < ANOMALY_PROBABILITY
-    temp = hash_uniform(rid, seed + 1) * (TEMP_MAX - TEMP_MIN) + TEMP_MIN
-    vib = hash_uniform(rid, seed + 2) * (VIB_MAX - VIB_MIN) + VIB_MIN
     return base.select(
         F.lit(MACHINE_ID).alias("machineId"),
-        F.when(is_anom, temp + ANOMALY_TEMP_DELTA).otherwise(temp).alias("temperature"),
-        F.when(is_anom, vib + ANOMALY_VIB_DELTA).otherwise(vib).alias("vibration"),
+        *simulator_readings(F.col("id"), seed),
         (F.lit(start_epoch_s) + F.col("id")).cast("long").alias("timestamp"),
     )
 

@@ -4,8 +4,8 @@ query: rate source → column program → JSON payloads.
 
 Reference dataflow vs engine plan (SURVEY §3.1):
 - 1 s publish loop + sleep  → ``rate`` source, rowsPerSecond=1 (O1)
-- uniform draws (O2)        → ``rand(seed) * (max-min) + min``
-- Bernoulli anomaly (O3)    → ``when(rand() < 0.10, col + delta)``
+- uniform draws (O2) and    → ``sources/generator.simulator_readings``
+  Bernoulli anomaly (O3)      (hash draws keyed on the rate ``value``)
 - current-time stamp (O4)   → rate source's own event timestamp, cast
   to Unix seconds (parity with currentTimeMillis()/1000, :182)
 - struct + Gson JSON (O5,O6)→ ``to_json(struct(...))``
@@ -23,16 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.telemetry import to_payload_json
-from ..sources.generator import (
-    ANOMALY_PROBABILITY,
-    ANOMALY_TEMP_DELTA,
-    ANOMALY_VIB_DELTA,
-    MACHINE_ID,
-    TEMP_MAX,
-    TEMP_MIN,
-    VIB_MAX,
-    VIB_MIN,
-)
+from ..sources.generator import MACHINE_ID, simulator_readings
 
 
 def telemetry_stream(
@@ -63,21 +54,13 @@ def telemetry_stream(
         machine = F.format_string(
             "NC_Machine_%03d", (F.col("value") % num_machines).cast("int")
         )
-    # Hash draws keyed on the rate source's monotonic `value`, NOT
-    # F.rand: duplicated rand(seed) expressions advance independent
-    # per-task RNG state and can diverge across plan stages/micro-
-    # batches (observed: +15°C spike without the paired +2 mm/s one).
-    # Hash draws are also replay-stable under failure recovery.
-    from ..sources.generator import hash_uniform
-
-    rid = F.col("value")
-    is_anom = hash_uniform(rid, seed) < ANOMALY_PROBABILITY
-    temp = hash_uniform(rid, seed + 1) * (TEMP_MAX - TEMP_MIN) + TEMP_MIN
-    vib = hash_uniform(rid, seed + 2) * (VIB_MAX - VIB_MIN) + VIB_MIN
+    # Draws keyed on the rate source's monotonic `value`, NOT F.rand:
+    # duplicated rand(seed) expressions advance independent per-task RNG
+    # state and can diverge across plan stages/micro-batches (observed:
+    # +15°C spike without the paired +2 mm/s one).
     return rate.select(
         machine.alias("machineId"),
-        F.when(is_anom, temp + ANOMALY_TEMP_DELTA).otherwise(temp).alias("temperature"),
-        F.when(is_anom, vib + ANOMALY_VIB_DELTA).otherwise(vib).alias("vibration"),
+        *simulator_readings(F.col("value"), seed),
         F.col("timestamp").cast("long").alias("timestamp"),
     )
 

@@ -171,7 +171,10 @@ def _session():
         get_spark,
     )
 
-    return get_spark()
+    # Pinned at 32 cores, the setting PLAN_DIGESTS.json was generated
+    # with: spread() repartitions to the session's core count, so the
+    # digests of those plans would otherwise follow the host.
+    return get_spark(cpus="32")
 
 
 def main() -> int:
