@@ -137,9 +137,23 @@ def trainer_key(prefix: str, trainer: str, fp: str) -> str:
 
 #: Per-process memo of LOADED pinned artifacts: path → ((mtime_ns,
 #: size), object), only the latest stat per path — see ``pinned``.
-#: Metadata-invalidated, never persisted, read-only contract on the
-#: stored objects.
+#: Metadata-invalidated, never persisted; row lists are stored frozen
+#: (``_freeze``).
 _PINNED_LOAD_MEMO: dict[str, tuple[tuple[int, int], Any]] = {}
+
+
+def _freeze(obj: Any) -> Any:
+    """A list of rows (a list whose items are lists or tuples — the
+    shape of every pinned centroid, codebook and rotation) as nested
+    tuples: the memo hands every caller the same object, so no caller
+    may be able to mutate it. Anything else is returned as is."""
+
+    def frozen(x: Any) -> Any:
+        return tuple(map(frozen, x)) if isinstance(x, (list, tuple)) else x
+
+    if isinstance(obj, list) and obj and all(isinstance(x, (list, tuple)) for x in obj):
+        return frozen(obj)
+    return obj
 
 
 def pinned(key: str, train) -> Any:
@@ -177,9 +191,10 @@ def pinned(key: str, train) -> Any:
     each skipped load is a GET + deserialize per query). A rewritten
     pin (new mtime/size) re-loads and replaces its entry, so the memo
     holds one entry per pin; nothing persists across processes.
-    Pinned artifacts are READ-ONLY by contract — callers build their
-    numpy/broadcast structures from the returned lists and must not
-    mutate them (the memo hands every caller the same object)."""
+    Pinned artifacts are READ-ONLY: the memo hands every caller the
+    same object, so a list of rows comes back as nested tuples
+    (``_freeze``) that callers build their numpy/broadcast structures
+    from and cannot mutate."""
     path = os.path.join(artifact_dir(), f"{key}.bin")
     if os.path.exists(path):
         st = os.stat(path)
@@ -187,7 +202,7 @@ def pinned(key: str, train) -> Any:
         hit = _PINNED_LOAD_MEMO.get(path)
         if hit is not None and hit[0] == stamp:
             return hit[1]
-        obj = load_artifact(path)
+        obj = _freeze(load_artifact(path))
         _PINNED_LOAD_MEMO[path] = (stamp, obj)
         return obj
     obj = train()
@@ -203,6 +218,7 @@ def pinned(key: str, train) -> Any:
         )
     save_artifact(obj, path)
     st = os.stat(path)
+    obj = _freeze(obj)
     _PINNED_LOAD_MEMO[path] = ((st.st_mtime_ns, st.st_size), obj)
     return obj
 

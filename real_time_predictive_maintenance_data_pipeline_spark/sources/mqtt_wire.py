@@ -36,6 +36,7 @@ Scale/production notes:
 from __future__ import annotations
 
 import os
+import select
 import socket
 import ssl
 import threading
@@ -313,16 +314,45 @@ class PacketStream:
     and on connection loss; ``eof`` distinguishes them — it latches True
     once the peer closed or the socket errored, so pollers can tell a
     quiet connection from a dead one instead of spinning on a socket
-    whose ``recv`` returns instantly forever."""
+    whose ``recv`` returns instantly forever.
 
-    def __init__(self, sock: socket.socket) -> None:
+    ``lock`` is for a socket other threads write to: an ``SSLSocket``
+    is one OpenSSL object, not safe for a ``recv`` concurrent with a
+    ``sendall``. The stream then waits for readability outside the
+    lock and reads under it, non-blocking, so a write waits at most
+    for one ``recv`` of bytes already there; the socket's own timeout
+    (which its writers use) is left as it was."""
+
+    def __init__(self, sock: socket.socket, lock: threading.Lock | None = None) -> None:
         self._sock = sock
+        self._lock = lock
         self._buf = b""
         self.eof = False
 
+    def _recv(self, timeout: float | None) -> bytes:
+        if self._lock is None:
+            self._sock.settimeout(timeout)
+            return self._sock.recv(65536)
+        pending = getattr(self._sock, "pending", None)
+        if not (pending and pending()):
+            try:
+                ready, _, _ = select.select([self._sock], [], [], timeout)
+            except ValueError:  # closed under us: fileno() is -1
+                raise OSError("socket closed") from None
+            if not ready:
+                raise TimeoutError
+        with self._lock:
+            prev = self._sock.gettimeout()
+            self._sock.setblocking(False)
+            try:
+                return self._sock.recv(65536)
+            except (ssl.SSLWantReadError, BlockingIOError):
+                raise TimeoutError from None  # a partial TLS record
+            finally:
+                self._sock.settimeout(prev)
+
     def read_packet(self, timeout: float | None = None) -> Packet | None:
         """Next complete packet, or None on EOF/timeout (check ``eof``)."""
-        self._sock.settimeout(timeout)
         while True:
             try:
                 pkt, used = parse_packet(self._buf)
@@ -333,7 +363,7 @@ class PacketStream:
             if self.eof:
                 return None
             try:
-                chunk = self._sock.recv(65536)
+                chunk = self._recv(timeout)
             except (TimeoutError, socket.timeout):
                 return None
             except OSError:
@@ -769,9 +799,11 @@ class MiniBroker:
             ).start()
 
     def _start_session(self, conn: socket.socket) -> None:
+        # bounds the TLS handshake and, after it, every write to this
+        # session (reads time out on their own, see PacketStream)
+        conn.settimeout(10.0)
         if self._tls is not None:
             try:
-                conn.settimeout(10.0)
                 conn = self._tls.wrap_socket(conn, server_side=True)
             except (ssl.SSLError, OSError):
                 # failed mutual auth (no/unknown client cert) costs only
@@ -787,7 +819,8 @@ class MiniBroker:
         self._serve(sess)
 
     def _serve(self, sess: _Session) -> None:
-        stream = PacketStream(sess.sock)
+        # reads share the session lock with every write: see PacketStream
+        stream = PacketStream(sess.sock, lock=sess.lock)
         while not self._stop.is_set():
             try:
                 pkt = stream.read_packet(timeout=0.25)

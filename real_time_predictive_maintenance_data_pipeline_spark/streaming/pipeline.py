@@ -11,8 +11,9 @@ Reference dataflows reproduced here:
 - **Real-time inference** (realtime_inference.py:92-139): subscribe →
   JSON parse with drop-malformed (O24) → feature projection (O25) →
   model scoring (O26) → formatted console alert (O27) →
-  ``scored_alert_stream``. Per-message callbacks become vectorized
-  micro-batch ``model.transform`` — the engine's core win.
+  ``scored_alert_stream``. Per-message callbacks become one
+  micro-batch expression: the forest compiled into a ``CASE WHEN``
+  (``ml.anomaly.prediction``) — the engine's core win.
 - **Improvement mode** (SURVEY §2.3): at-least-once QoS-1 duplicates
   removed via ``dropDuplicatesWithinWatermark``; event-time windowed
   stats via watermark + tumbling window (the reference carries event
@@ -23,7 +24,8 @@ Scale notes (100 TB / 1000-executor design):
   ``maxOffsetsPerTrigger`` for backpressure; plans are unchanged.
 - The scoring path is stateless: it scales linearly with input
   partitions, no shuffle at all (verified: plan is Scan → Project →
-  Filter → Project; the RF model broadcast rides task closures).
+  Generate → Filter → Project, one ``from_json`` per row; the forest
+  is literals in the plan, nothing rides task closures).
 - Stateful ops (dedup, windows) shuffle once on the state key; with
   machineId as key, one machine = one state partition — mirror of the
   reference's Kinesis shard keying.
@@ -54,8 +56,8 @@ ERROR_PREFIX = "telemetry_errors"  # phase3-kinesis-s3.yaml:85
 #: the envelope is deliberately generous (any physically possible
 #: industrial sensor reading passes) because the boundary's job is to
 #: reject POISON — NaN, ±Inf (JSON ``1e999`` parses to Infinity), or a
-#: 1e300 that overflows the downstream exact-cents cast and MLlib's
-#: finite-vector requirement — not to pre-empt the alerting model.
+#: 1e300 that overflows the downstream exact-cents cast — not to
+#: pre-empt the alerting model.
 #: Vibration's 0 lower bound is reference parity (O20 clip,
 #: generate_historical_data.py via sources/generator.py:128).
 TELEMETRY_BOUNDS: dict[str, tuple[float, float]] = {
@@ -71,8 +73,17 @@ def parse_telemetry(raw: DataFrame, value_col: str = "value") -> DataFrame:
     ``_corrupt`` (the raw payload, only for rows that failed to parse or
     failed field validation — realtime_inference.py:101-114 drops these
     with a warning; we keep them addressable for the quarantine sink).
+
+    The parse sits inside a one-row ``inline`` generator: Catalyst
+    pushes a downstream filter through a plain projection by inlining
+    the aliased ``from_json`` into it (a dozen copies or more in each
+    ``quarantine_split`` leg), but it cannot push a filter on a
+    generator's output below the generator, so every row is parsed
+    exactly once whatever the caller filters on.
     """
-    parsed = raw.withColumn("_p", parse_payload(F.col(value_col)))
+    parsed = raw.select(
+        F.inline(F.array(F.struct(parse_payload(F.col(value_col)).alias("_p"), value_col)))
+    )
     valid = (
         F.col("_p").isNotNull()
         & F.col("_p.temperature").isNotNull()
@@ -83,7 +94,9 @@ def parse_telemetry(raw: DataFrame, value_col: str = "value") -> DataFrame:
         F.col("_p.temperature").alias("temperature"),
         F.col("_p.vibration").alias("vibration"),
         F.col("_p.timestamp").alias("timestamp"),
-        F.when(~valid, F.col(value_col)).alias("_corrupt"),
+        # a null payload (a Kafka tombstone) is corrupt too: marked "",
+        # or it would pass the split with null readings and be scored
+        F.when(~valid, F.coalesce(F.col(value_col), F.lit(""))).alias("_corrupt"),
     )
 
 
@@ -101,11 +114,12 @@ def quarantine_split(
     +Infinity) or one outside the plausibility envelope
     (``TELEMETRY_BOUNDS`` by default; pass ``bounds={}`` to disable)
     is quarantined too — reference parity with
-    realtime_inference.py:101-114, which drops invalid readings, and
-    the only thing standing between a parsed +Inf and a killed MLlib
-    scoring micro-batch ("Vector values MUST NOT be NaN or Infinity").
-    Measure-invalid rows are re-serialized via ``to_json`` so the
-    quarantine sink sees one string column either way, and every
+    realtime_inference.py:101-114, which drops invalid readings. The
+    compiled scorer (``ml.anomaly.score``) cannot fail on such a row,
+    so the split no longer guards scoring; it keeps poison out of the
+    lake and the alerts. Measure-invalid rows are re-serialized via
+    ``to_json`` so the quarantine sink sees one string column either
+    way, and every
     quarantined row carries a ``_reason`` tag (``parse`` — the payload
     never parsed — vs ``measure`` — it parsed but a reading violated
     the envelope), matching the batch boundary's reason-tagged split
@@ -201,10 +215,10 @@ def quarantine_sink(
 def scored_alert_stream(model, parsed_good: DataFrame) -> DataFrame:
     """O25–O27: vectorized scoring + alert formatting on a stream.
 
-    ``model.transform`` works unchanged on streaming DataFrames
-    (VectorAssembler + RF are row-local); the output adds an integer
-    ``prediction`` and the byte-exact ``alert`` line of
-    realtime_inference.py:126-139."""
+    ``ml.anomaly.score`` is one row-local expression (the fitted forest
+    compiled to a ``CASE WHEN``), so it works unchanged on streaming
+    DataFrames; the output adds an integer ``prediction`` and the
+    byte-exact ``alert`` line of realtime_inference.py:126-139."""
     from ..ml.anomaly import score
 
     scored = score(model, parsed_good)

@@ -130,3 +130,18 @@ def test_pinned_memo_keeps_latest_load_per_path(tmp_path, monkeypatch):
         os.utime(path, ns=(gen * 10**9, gen * 10**9))
         assert ART.pinned(key, lambda: [9]) == obj
     assert len(ART._PINNED_LOAD_MEMO) == 1
+
+
+def test_pinned_rows_are_frozen(tmp_path, monkeypatch):
+    """The memo hands every caller the same object: a pinned list of
+    rows comes back as nested tuples, from a fresh train and from the
+    memo alike, so no caller can mutate what the next one reads."""
+    monkeypatch.setenv("RTPMDP_ARTIFACT_DIR", str(tmp_path))
+    monkeypatch.setattr(ART, "_PINNED_LOAD_MEMO", {})
+    rows = [(0, [1.0, 2.0]), (1, [3.0, 4.0])]
+    key = "rows_t1_n1h1"
+    first = ART.pinned(key, lambda: rows)
+    assert first == ((0, (1.0, 2.0)), (1, (3.0, 4.0)))
+    assert ART.pinned(key, lambda: [9]) is first
+    monkeypatch.setattr(ART, "_PINNED_LOAD_MEMO", {})
+    assert ART.pinned(key, lambda: [9]) == first  # reloaded from disk

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from real_time_predictive_maintenance_data_pipeline_spark.ml import anomaly as A
 from real_time_predictive_maintenance_data_pipeline_spark.ml.anomaly import (
     score,
     train,
@@ -63,6 +64,67 @@ def test_model_save_load_roundtrip(spark, hist, tmp_path):
     a = score(model, batch).agg(F.sum("prediction").alias("s")).first().s
     b = score(reloaded, batch).agg(F.sum("prediction").alias("s")).first().s
     assert a == b
+
+
+@pytest.fixture(scope="module")
+def model(hist):
+    return train(hist)
+
+
+def _transform(model, df):
+    """MLlib's own scoring, in ``score``'s output shape."""
+    return model.transform(df).select(
+        *df.columns, F.col("prediction").cast("int").alias("prediction")
+    )
+
+
+def test_compiled_score_equals_transform(spark, model):
+    """The compiled forest predicts what ``model.transform`` predicts,
+    row for row, on 500 k generator rows."""
+    batch = stream_telemetry_batch(spark, n=500_000)
+    ours, theirs = score(model, batch), _transform(model, batch)
+    assert ours.exceptAll(theirs).count() == 0
+    assert theirs.exceptAll(ours).count() == 0
+
+
+def test_compiled_score_at_every_cut(spark, model):
+    """Each cell edge: every feature at each of its cuts and one ulp to
+    either side, in every combination with the other features' — the
+    points where ``<=`` against ``<`` or a wrong cut would show."""
+    import itertools
+    import math
+
+    cols, cuts, _ = A._compile(model)
+    assert all(cuts), cuts  # the trained forest splits on both features
+    edges = [
+        sorted({x for c in cs for x in (math.nextafter(c, -math.inf), c, math.nextafter(c, math.inf))})
+        for cs in cuts
+    ]
+    grid = spark.createDataFrame(list(itertools.product(*edges)), list(cols))
+    ours, theirs = score(model, grid), _transform(model, grid)
+    assert grid.count() == math.prod(len(e) for e in edges)
+    assert ours.exceptAll(theirs).count() == 0
+    assert theirs.exceptAll(ours).count() == 0
+
+
+def test_compile_memo_hit_for_same_model(model, monkeypatch):
+    """The forest is walked once per model; later calls reuse the table
+    and only rebuild the ``Column``."""
+    walks = []
+    real = A.forest_trees
+    monkeypatch.setattr(A, "_COMPILED", {})
+    monkeypatch.setattr(A, "forest_trees", lambda m: walks.append(m) or real(m))
+    first = str(A.prediction(model))
+    assert str(A.prediction(model)) == first
+    assert len(walks) == 1
+
+
+def test_train_on_checkpoint_grows_the_same_forest(spark):
+    """``train`` fits on a ``localCheckpoint`` of its input: the forest
+    is node for node the one a fit on the frame itself grows."""
+    frame = historical_telemetry(spark)
+    direct = A._strip_summary(A.build_pipeline().fit(frame))
+    assert A.forest_trees(train(frame)) == A.forest_trees(direct)
 
 
 def test_artifact_roundtrip_and_batch_udf_scoring(spark, hist, tmp_path):
