@@ -21,7 +21,8 @@ per-cell class becomes a nested ``CASE WHEN`` on the raw columns. No
 feature vector, no model broadcast, no UDF: the prediction is an
 ordinary expression in the query's own projection. MLlib
 caps the distinct thresholds per continuous feature at ``maxBins - 1``,
-so the model itself bounds the table.
+so the model itself bounds the table. ``ml.artifact`` compiles the
+reference-format artifact through the same ``compile_trees``.
 """
 
 from __future__ import annotations
@@ -90,8 +91,7 @@ def train_and_eval(df: DataFrame, seed: int = 42) -> tuple[PipelineModel, EvalRe
     (README.md:106-108 quality gate)."""
     train_df, test_df = df.randomSplit([0.8, 0.2], seed=seed)
     model = _strip_summary(build_pipeline(seed).fit(train_df))
-    scored = model.transform(test_df)
-    agg = scored.agg(
+    agg = score(model, test_df).agg(
         F.sum(((F.col("prediction") == 1) & (F.col(LABEL_COL) == 1)).cast("int")).alias("tp"),
         F.sum(((F.col("prediction") == 1) & (F.col(LABEL_COL) == 0)).cast("int")).alias("fp"),
         F.sum(((F.col("prediction") == 0) & (F.col(LABEL_COL) == 1)).cast("int")).alias("fn"),
@@ -139,49 +139,47 @@ def _cuts(tree, out: dict[int, set[float]]) -> None:
         _cuts(tree[3], out)
 
 
-def _leaf(tree, x: tuple[float, ...]) -> tuple[float, ...]:
-    while len(tree) == 4:
-        tree = tree[2] if x[tree[0]] <= tree[1] else tree[3]
-    return tree[0]
-
-
 def _vote(trees: list[tuple], n_classes: int, x: tuple[float, ...]) -> int:
     """MLlib's ``RandomForestClassificationModel`` rule: each tree adds
     its leaf's class counts over their total, then the first argmax
     (ties go to class 0)."""
     votes = [0.0] * n_classes
     for tree in trees:
-        counts = _leaf(tree, x)
-        total = sum(counts)
+        while len(tree) == 4:
+            tree = tree[2] if x[tree[0]] <= tree[1] else tree[3]
+        total = sum(tree[0])
         if total != 0:
-            for i, c in enumerate(counts):
+            for i, c in enumerate(tree[0]):
                 votes[i] += c / total
     return votes.index(max(votes))
 
 
-def _compile(model: PipelineModel):
-    """The forest as a cell table. A cell's representative point is its
-    upper cut on every feature (``+inf`` for the last cell): it takes
-    the same branch as every other point of the cell at every split.
-    ``NaN <= t`` is false in MLlib and in Catalyst alike, so NaN lands
-    in the last cell in both."""
-    forest = model.stages[-1]
-    key = (forest.uid, SparkContext._jvm.System.identityHashCode(forest._java_obj))
-    hit = _COMPILED.get(key)
-    if hit is not None:
-        return hit
-    cols = tuple(model.stages[0].getInputCols())
-    trees = forest_trees(model)
+def compile_trees(cols: tuple[str, ...], trees: list[tuple], n_classes: int):
+    """``_walk``-form trees as a cell table: (cols, cuts per feature,
+    class index per cell). A cell's point is its upper cut on every
+    feature (``+inf`` for the last cell), which branches as every point
+    of the cell does. ``NaN <= t`` is false in MLlib and in Catalyst
+    alike, so NaN lands in the last cell in both."""
     found: dict[int, set[float]] = {}
     for tree in trees:
         _cuts(tree, found)
     cuts = tuple(tuple(sorted(found.get(f, ()))) for f in range(len(cols)))
     points = [(*c, math.inf) for c in cuts]
     table = {
-        cell: _vote(trees, forest.numClasses, tuple(p[i] for p, i in zip(points, cell)))
+        cell: _vote(trees, n_classes, tuple(p[i] for p, i in zip(points, cell)))
         for cell in itertools.product(*(range(len(p)) for p in points))
     }
-    _COMPILED[key] = hit = (cols, cuts, table)
+    return cols, cuts, table
+
+
+def _compile(model: PipelineModel):
+    """The pipeline's fitted forest as a cell table, memoized."""
+    forest = model.stages[-1]
+    key = (forest.uid, SparkContext._jvm.System.identityHashCode(forest._java_obj))
+    hit = _COMPILED.get(key)
+    if hit is None:
+        cols = tuple(model.stages[0].getInputCols())
+        _COMPILED[key] = hit = compile_trees(cols, forest_trees(model), forest.numClasses)
     return hit
 
 
@@ -193,10 +191,7 @@ def _case(cols, cuts, table, prefix: tuple[int, ...] = ()):
     if f == len(cols):
         return table[prefix]
     subs = [_case(cols, cuts, table, (*prefix, i)) for i in range(len(cuts[f]) + 1)]
-    arms: list[tuple[float, object]] = []
-    for cut, sub, nxt in zip(cuts[f], subs, subs[1:]):
-        if sub != nxt:
-            arms.append((cut, sub))
+    arms = [(cut, sub) for cut, sub, nxt in zip(cuts[f], subs, subs[1:]) if sub != nxt]
     return (cols[f], arms, subs[-1]) if arms else subs[-1]
 
 
@@ -211,11 +206,16 @@ def _column(case) -> Column:
     return out.otherwise(_column(last))
 
 
+def case_column(cols, cuts, table) -> Column:
+    """A cell table with 0/1 int cells as one nested ``CASE WHEN``."""
+    return _column(_case(cols, cuts, table))
+
+
 def prediction(model: PipelineModel) -> Column:
     """The fitted VectorAssembler → RandomForest pipeline as one integer
     ``Column`` over the raw feature columns — ``model.transform``'s
     prediction, for every finite input and NaN alike."""
-    return _column(_case(*_compile(model)))
+    return case_column(*_compile(model))
 
 
 def score(model: PipelineModel, df: DataFrame) -> DataFrame:

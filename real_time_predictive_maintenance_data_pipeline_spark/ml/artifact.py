@@ -1,19 +1,18 @@
-"""Model-ARTIFACT scoring path — parity with the reference's
-joblib-RF inference contract (realtime_inference.py:58-65 loads
+"""Model-ARTIFACT scoring — parity with the reference's joblib-RF
+inference contract (realtime_inference.py:58-65 loads
 ``predictive_maintenance_rf_model.joblib``; :117-123 calls
-``model.predict(X)[0]`` per message).
-
-The engine's native path trains/scores MLlib (``ml.anomaly``), but a
-user holding the reference's actual sklearn artifact must be able to
-score it WITHOUT retraining. This module provides that bridge:
+``model.predict(X)[0]`` per message), so that a user holding the
+reference's sklearn artifact scores it WITHOUT retraining:
 
 - ``load_artifact``/``save_artifact``: joblib when installed, stdlib
   pickle otherwise (joblib's default persistence is pickle-compatible
   for the plain-object case).
-- ``score_with_artifact``: Spark-side scoring through
-  ``pyspark.ml.functions.predict_batch_udf`` — Arrow-batched numpy
-  in, one ``model.predict(X)`` call per batch, never per row. This is
-  the O26 "sklearn parity" mapping named by SURVEY §2.1.
+- ``score_with_artifact``: loads the artifact on the driver and
+  compiles it into the ``CASE WHEN`` that ``ml.anomaly`` builds for
+  the MLlib forest — one scorer, no Python worker, no Arrow transfer
+  (the O26 "sklearn parity" mapping, SURVEY §2.1). NaN and null fail
+  every ``<=`` split and ALERT, as in MLlib and Catalyst; every
+  pipeline quarantines them before scoring.
 - ``train_reference_artifact``: when sklearn is importable, fits the
   reference's RandomForestClassifier on the (driver-collected, 10 k
   row — the reference's own training size, README.md:94-96) historical
@@ -22,26 +21,20 @@ score it WITHOUT retraining. This module provides that bridge:
   are linearly separable by construction (SURVEY §5.2 #4), so on the
   separable region the stand-in, a real sklearn RF, and the MLlib RF
   all agree — tests pin that agreement.
-
-Scale note: ``predict_batch_udf`` ships the artifact to every executor
-once (lazy init per worker) and scores Arrow batches — the right shape
-for 100 TB scoring. Only TRAINING of the sklearn artifact is
-driver-local (inherent: sklearn is single-process; the distributed
-trainer is MLlib in ``ml.anomaly``).
 """
 
 from __future__ import annotations
 
+import math
 import os
 import pickle
 from typing import Any
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
 
-from .anomaly import FEATURE_COLS, LABEL_COL
+from .anomaly import FEATURE_COLS, LABEL_COL, case_column, compile_trees
 
 try:  # environment-gated: joblib is optional (brief: no pip installs)
     import joblib as _joblib
@@ -70,20 +63,26 @@ class ThresholdAnomalyModel:
     temp_threshold = 78.5
     vib_threshold = 2.85
 
+    def tree(self) -> tuple:
+        """The decision as one tree in ``ml.anomaly``'s tuple form."""
+        normal, alert = ((1.0, 0.0),), ((0.0, 1.0),)
+        return (0, self.temp_threshold, (1, self.vib_threshold, normal, alert), alert)
+
     def predict(self, X: np.ndarray) -> np.ndarray:
+        """``tree`` walked over numpy rows (NaN alerts, as compiled)."""
         X = np.asarray(X, dtype=np.float64)
-        return (
-            (X[:, 0] > self.temp_threshold) | (X[:, 1] > self.vib_threshold)
-        ).astype(np.int64)
+        normal = (X[:, 0] <= self.temp_threshold) & (X[:, 1] <= self.vib_threshold)
+        return (~normal).astype(np.int64)
 
 
 def save_artifact(model: Any, path: str) -> None:
     """Persist with joblib when available (the reference's format —
     realtime_inference.py:58-65), else stdlib pickle.
 
-    Write-then-rename: executors lazy-load the artifact concurrently
-    with the write, so the file must appear atomically — a partial
-    in-place write would corrupt-load flakily."""
+    Write-then-rename: ``pinned`` trainers racing on one key (several
+    drivers, or a driver and a later reader) must see the file appear
+    atomically — a partial in-place write would corrupt-load
+    flakily."""
     tmp = f"{path}.tmp.{os.getpid()}"
     if _joblib is not None:
         _joblib.dump(model, tmp)
@@ -129,9 +128,8 @@ TRAINER_VERSIONS: dict[str, int] = {
 def trainer_key(prefix: str, trainer: str, fp: str) -> str:
     """Build a ``pinned`` cache key that mechanically carries the
     trainer's version: ``{prefix}_t{version}_{fp}``. Callers never
-    hand-write the ``_tN`` component (the r15 OPQ key omitted it —
-    ADVICE r15), so a trainer-algorithm change invalidates every
-    derived pin the moment ``TRAINER_VERSIONS`` is bumped."""
+    hand-write the ``_tN`` component, so a trainer-algorithm change
+    invalidates every derived pin once ``TRAINER_VERSIONS`` is bumped."""
     return f"{prefix}_t{TRAINER_VERSIONS[trainer]}_{fp}"
 
 
@@ -159,10 +157,9 @@ def _freeze(obj: Any) -> Any:
 def pinned(key: str, train) -> Any:
     """Train-once → persist → load: the default query-path contract for
     every TRAINED structure (IVF centroids, PQ codebooks, the RF
-    artifact). The r14 layout audit proved in-query training is the
-    layout-nondeterminism vector for ANN structures — the fix is to
-    treat trained structures like any other model artifact: train them
-    once, pin the bytes, and have the query plan LOAD, never refit.
+    artifact). In-query training makes ANN structures depend on the
+    input's physical layout, so trained structures are treated like any
+    other model artifact: trained once, pinned, and LOADED by the plan.
 
     ``key`` must be layout-insensitive (use ``dataset_fingerprint`` on
     the training frame plus the hyperparameters), so re-layouts of the
@@ -174,53 +171,42 @@ def pinned(key: str, train) -> Any:
     (``save_artifact`` write-then-rename), so racing trainers converge
     on one winner and readers never see a partial file.
 
-    Degenerate results are REFUSED, not cached (r15 verdict task 3):
-    a ``train()`` that returns ``None`` or an empty container raises
-    the crisp estimator error here, BEFORE persisting — a corrupt pin
+    Degenerate results are REFUSED, not cached: a ``train()`` that
+    returns ``None`` or an empty container raises the crisp estimator
+    error here, BEFORE persisting — a corrupt pin
     (e.g. the ``..._n0hNone.bin`` empty-corpus case) would otherwise
     serve junk to every later query of the same fingerprint, long
     after the empty-input bug is fixed.
 
     Loads are memoized per process by path, holding the (mtime_ns,
-    size) they were loaded at (r17, same metadata-stat pattern as the
-    parquet schema memo): the ANN queries re-enter ``pinned`` on every
-    invocation and re-paid the file read + deserialize each time.
-    Honest local measurement: these pins are ~10 KB and joblib loads
-    them in ~0.05-0.09 ms, so the local saving is noise — the point is
-    structural (a real deployment keeps pins on an object store, where
-    each skipped load is a GET + deserialize per query). A rewritten
-    pin (new mtime/size) re-loads and replaces its entry, so the memo
-    holds one entry per pin; nothing persists across processes.
+    size) they were loaded at: the ANN queries re-enter ``pinned`` on
+    every invocation, and on an object store each skipped load is a GET
+    + deserialize. A rewritten pin (new mtime/size) re-loads and
+    replaces its entry, so the memo holds one entry per pin.
     Pinned artifacts are READ-ONLY: the memo hands every caller the
     same object, so a list of rows comes back as nested tuples
     (``_freeze``) that callers build their numpy/broadcast structures
     from and cannot mutate."""
     path = os.path.join(artifact_dir(), f"{key}.bin")
-    if os.path.exists(path):
-        st = os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
-        hit = _PINNED_LOAD_MEMO.get(path)
-        if hit is not None and hit[0] == stamp:
-            return hit[1]
-        obj = _freeze(load_artifact(path))
-        _PINNED_LOAD_MEMO[path] = (stamp, obj)
-        return obj
-    obj = train()
-    try:
-        empty = len(obj) == 0  # type: ignore[arg-type]
-    except TypeError:
-        empty = False
-    if obj is None or empty:
-        raise ValueError(
-            f"pinned({key!r}) needs at least a non-empty trained "
-            f"artifact, got {obj!r} — refusing to persist a degenerate "
-            "pin (an upstream filter or source produced no training rows)"
-        )
-    save_artifact(obj, path)
+    if not os.path.exists(path):
+        obj = train()
+        try:
+            empty = len(obj) == 0  # type: ignore[arg-type]
+        except TypeError:
+            empty = False
+        if obj is None or empty:
+            raise ValueError(
+                f"pinned({key!r}) needs at least a non-empty trained "
+                f"artifact, got {obj!r} — refusing to persist a degenerate "
+                "pin (an upstream filter or source produced no training rows)"
+            )
+        save_artifact(obj, path)
     st = os.stat(path)
-    obj = _freeze(obj)
-    _PINNED_LOAD_MEMO[path] = ((st.st_mtime_ns, st.st_size), obj)
-    return obj
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _PINNED_LOAD_MEMO.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = _PINNED_LOAD_MEMO[path] = (stamp, _freeze(load_artifact(path)))
+    return hit[1]
 
 
 def dataset_fingerprint(df: DataFrame, *cols: str) -> str:
@@ -253,32 +239,43 @@ def train_reference_artifact(historical: DataFrame, seed: int = 42) -> Any:
     return rf
 
 
-def artifact_predict_udf(model_path: str, batch_size: int = 4096):
-    """``predict_batch_udf`` over a persisted artifact: each executor
-    loads the artifact once (lazy, per python worker) and scores
-    Arrow-fed numpy batches — the vectorized replacement for the
-    reference's per-message ``model.predict(X)[0]`` loop
-    (realtime_inference.py:117-123)."""
-    from pyspark.ml.functions import predict_batch_udf
+def _f32_cut(t: float) -> float:
+    """The double ``c`` with ``x <= c`` exactly when ``float32(x) <= t``,
+    sklearn's test: the last double that rounds onto ``f``, the largest
+    float32 not above ``t`` (rounding is monotone, ties go to even)."""
+    f = np.float32(t)
+    f = f if f <= t else np.nextafter(f, np.float32(-np.inf))
+    mid = (float(f) + float(np.nextafter(f, np.float32(np.inf)))) / 2
+    return mid if np.float32(mid) == f else math.nextafter(mid, -math.inf)
 
-    def make_predict_fn():
-        model = load_artifact(model_path)
 
-        def predict(temperature: np.ndarray, vibration: np.ndarray) -> np.ndarray:
-            X = np.stack([temperature, vibration], axis=1)
-            return model.predict(X)
-
-        return predict
-
-    return predict_batch_udf(
-        make_predict_fn, return_type=IntegerType(), batch_size=batch_size
+def _sk_tree(tree, node: int = 0) -> tuple:
+    """A fitted sklearn ``tree_`` in ``ml.anomaly``'s tuple form."""
+    if tree.children_left[node] == -1:
+        return (tuple(tree.value[node][0].tolist()),)
+    return (
+        int(tree.feature[node]),
+        _f32_cut(tree.threshold[node]),
+        _sk_tree(tree, tree.children_left[node]),
+        _sk_tree(tree, tree.children_right[node]),
     )
+
+
+def artifact_column(model: Any) -> Column:
+    """The artifact's ``predict`` as one integer ``Column``, compiled on
+    the driver. A sklearn forest votes as MLlib's does; its argmax maps
+    through ``classes_``, and its distinct cuts are not capped."""
+    if isinstance(model, ThresholdAnomalyModel):
+        trees, classes = [model.tree()], (0, 1)
+    elif _SkRF is not None and isinstance(model, _SkRF):
+        trees, classes = [_sk_tree(e.tree_) for e in model.estimators_], model.classes_
+    else:
+        raise TypeError(f"cannot compile a {type(model).__name__} artifact")
+    cols, cuts, table = compile_trees(FEATURE_COLS, trees, len(classes))
+    return case_column(cols, cuts, {cell: int(classes[i]) for cell, i in table.items()})
 
 
 def score_with_artifact(df: DataFrame, model_path: str) -> DataFrame:
-    """Input columns + integer ``prediction`` ∈ {0,1} — same output
-    contract as the MLlib path (``ml.anomaly.score``)."""
-    udf = artifact_predict_udf(model_path)
-    return df.withColumn(
-        "prediction", udf(F.col(FEATURE_COLS[0]), F.col(FEATURE_COLS[1]))
-    )
+    """Input columns + integer ``prediction`` ∈ {0,1}, as in the MLlib
+    path (``ml.anomaly.score``)."""
+    return df.select("*", artifact_column(load_artifact(model_path)).alias("prediction"))

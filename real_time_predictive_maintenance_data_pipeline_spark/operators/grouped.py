@@ -16,6 +16,7 @@ exists to exercise the grouped-map path, not because OLS needs it).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
@@ -69,13 +70,10 @@ def grouped_median_udf():
     surface for moderate-sized groups that need exact or bespoke math.
     """
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # functionType passed explicitly: `from __future__ import
-    # annotations` stringifies the signature, which defeats Spark's
-    # type-hint inference for the GROUPED_AGG variant.
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def median_udf(v):
+    @pandas_udf(DoubleType())
+    def median_udf(v: pd.Series) -> float:
         return float(np.median(v.to_numpy()))
 
     return median_udf

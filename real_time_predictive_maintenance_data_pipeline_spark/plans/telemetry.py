@@ -449,11 +449,12 @@ def telemetry_train_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def telemetry_artifact_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O22/O26 artifact parity: persist a model artifact (joblib when
     installed — the reference's format, realtime_inference.py:58-65 —
-    else pickle), then score a 50 k-row telemetry batch through
-    ``predict_batch_udf`` (executor-side lazy load + Arrow-batched
-    ``model.predict``). Agreement with the MLlib path on the separable
-    region is pinned in tests/test_ml.py; rows-only here (model +
-    generated inputs live outside the oracle tables)."""
+    else pickle), then score a 50 k-row telemetry batch with it: the
+    driver loads the artifact and compiles it into the same kind of
+    ``CASE WHEN`` as the MLlib forest (``ml.artifact.artifact_column``).
+    Agreement with the MLlib path on the separable region is pinned in
+    tests/test_ml.py; rows-only here (model + generated inputs live
+    outside the oracle tables)."""
     import os
     from ..sources.scratch import scratch_dir
 

@@ -142,12 +142,16 @@ def _ship_package(spark: SparkSession) -> None:
     fine until the first UDF task, then workers raise
     ``ModuleNotFoundError``. Shipping a zip via ``addPyFile`` fixes this
     everywhere: local mode, a real cluster, or a driver running from any
-    cwd. Idempotent per JVM (re-adding the same path is a no-op warn).
+    cwd. Idempotent: a zip already in the context's includes is not
+    re-added, as ``addPyFile`` would append it to the includes and to
+    ``sys.path`` once more on every call.
     """
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
+    if f"{pkg_name}.zip" in spark.sparkContext._python_includes:
+        return
     zip_path = os.path.join(
         spark.sparkContext._temp_dir
         if hasattr(spark.sparkContext, "_temp_dir")

@@ -7,6 +7,11 @@ are separable by construction (normal temp ≤ ~77 °C at 3σ vs anomaly
 
 from __future__ import annotations
 
+import itertools
+import math
+from types import SimpleNamespace
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,9 +96,6 @@ def test_compiled_score_at_every_cut(spark, model):
     """Each cell edge: every feature at each of its cuts and one ulp to
     either side, in every combination with the other features' — the
     points where ``<=`` against ``<`` or a wrong cut would show."""
-    import itertools
-    import math
-
     cols, cuts, _ = A._compile(model)
     assert all(cuts), cuts  # the trained forest splits on both features
     edges = [
@@ -127,12 +129,11 @@ def test_train_on_checkpoint_grows_the_same_forest(spark):
     assert A.forest_trees(train(frame)) == A.forest_trees(direct)
 
 
-def test_artifact_roundtrip_and_batch_udf_scoring(spark, hist, tmp_path):
+def test_artifact_roundtrip_and_compiled_scoring(spark, hist, model, tmp_path):
     """O22/O26 artifact contract: save/load roundtrip (joblib when
-    installed, else pickle) + predict_batch_udf scoring agrees with the
+    installed, else pickle) + compiled artifact scoring agrees with the
     MLlib RF on the separable region (both must realize the same
     decision function there — the reference reports 1.00/1.00)."""
-    from real_time_predictive_maintenance_data_pipeline_spark.ml.anomaly import score, train
     from real_time_predictive_maintenance_data_pipeline_spark.ml.artifact import (
         load_artifact,
         save_artifact,
@@ -152,16 +153,12 @@ def test_artifact_roundtrip_and_batch_udf_scoring(spark, hist, tmp_path):
     # separable region only: normal ≤ 3σ bounds, anomalies ≥ generator
     # spike floors — inside it EVERY competent model agrees, outside it
     # model-specific boundaries legitimately differ (SURVEY §7.4 #5).
-    from real_time_predictive_maintenance_data_pipeline_spark.sources.generator import (
-        stream_telemetry_batch,
-    )
-
     s = stream_telemetry_batch(spark, n=5_000)
     sep = s.filter(
         ((F.col("temperature") <= 77.0) & (F.col("vibration") <= 2.7))
         | ((F.col("temperature") >= 80.0) | (F.col("vibration") >= 3.0))
     )
-    mllib = score(train(hist), sep).select("timestamp", "prediction")
+    mllib = score(model, sep).select("timestamp", "prediction")
     artifact = score_with_artifact(sep, path).select(
         "timestamp", F.col("prediction").alias("prediction_art")
     )
@@ -170,6 +167,157 @@ def test_artifact_roundtrip_and_batch_udf_scoring(spark, hist, tmp_path):
     n_disagree = joined.filter(F.col("prediction") != F.col("prediction_art")).count()
     assert n > 3000  # the separable region covers most of the batch
     assert n_disagree == 0
+
+
+def _edges(cut: float, ulp) -> list[float]:
+    return [ulp(cut, -math.inf), cut, ulp(cut, math.inf)]
+
+
+def test_stand_in_column_is_its_predict(spark, tmp_path):
+    """The stand-in's compiled column and its numpy ``predict`` are one
+    function: on 50 k generator rows, at each cut and one ulp to either
+    side in every combination, and on NaN, ±inf and null — where a bad
+    reading ALERTs, as MLlib's and Catalyst's ``NaN <= t`` is false."""
+    from real_time_predictive_maintenance_data_pipeline_spark.ml.anomaly import FEATURE_COLS
+    from real_time_predictive_maintenance_data_pipeline_spark.ml.artifact import (
+        ThresholdAnomalyModel,
+        save_artifact,
+        score_with_artifact,
+    )
+
+    art = ThresholdAnomalyModel()
+    path = str(tmp_path / "stand_in.bin")
+    save_artifact(art, path)
+    bad = [math.nan, math.inf, -math.inf, None]
+    grid = spark.createDataFrame(
+        list(
+            itertools.product(
+                _edges(art.temp_threshold, math.nextafter) + bad,
+                _edges(art.vib_threshold, math.nextafter) + bad,
+            )
+        ),
+        "temperature double, vibration double",
+    )
+    rows = stream_telemetry_batch(spark, n=50_000).select(*FEATURE_COLS).unionByName(grid)
+    pdf = score_with_artifact(rows, path).toPandas()
+    assert len(pdf) == 50_000 + 7 * 7
+    expect = art.predict(pdf[list(FEATURE_COLS)].to_numpy(dtype="float64"))
+    assert (pdf["prediction"].to_numpy() == expect).all()
+    assert pdf["prediction"].sum() > 0  # the batch has anomalies
+    nan_or_null = np.isnan(pdf[list(FEATURE_COLS)].to_numpy(dtype="float64")).any(axis=1)
+    assert nan_or_null.sum() == 7 * 7 - 5 * 5
+    assert (pdf["prediction"].to_numpy()[nan_or_null] == 1).all()
+
+
+@pytest.mark.parametrize(
+    "t", [74.5, 2.5, 78.5, 0.1, 2.4675, 74.669, -3.3, 1e-30, 123456.789, 2.0 + 2.0**-24]
+)
+def test_f32_cut_matches_sklearn_float32_test(t):
+    """``x <= _f32_cut(t)`` is sklearn's ``float32(x) <= t``: the cut
+    passes, the next double fails, and float32 rounding is monotone."""
+    from real_time_predictive_maintenance_data_pipeline_spark.ml.artifact import _f32_cut
+
+    c = _f32_cut(t)
+    assert np.float32(c) <= t
+    assert np.float32(math.nextafter(c, math.inf)) > t
+
+
+def _sk_forest_class(monkeypatch):
+    """A stand-in for sklearn's forest class, installed as the one
+    ``artifact_column`` dispatches on."""
+    from real_time_predictive_maintenance_data_pipeline_spark.ml import artifact as AR
+
+    class Forest:
+        def __init__(self, classes, *trees):
+            self.classes_ = np.array(classes)
+            self.estimators_ = [SimpleNamespace(tree_=t) for t in trees]
+
+    monkeypatch.setattr(AR, "_SkRF", Forest)
+    return Forest
+
+
+def _tree(left, right, feature, threshold, value):
+    return SimpleNamespace(
+        children_left=np.array(left),
+        children_right=np.array(right),
+        feature=np.array(feature),
+        threshold=np.array(threshold, dtype="float64"),
+        value=np.array(value, dtype="float64"),
+    )
+
+
+def test_sklearn_shaped_forest_compiles_to_expected_case(monkeypatch):
+    """Objects with sklearn's ``tree_`` arrays compile to the expected
+    ``CASE``: float32-snapped cuts, MLlib's vote, a cut no cell depends
+    on merged away, and the argmax mapped through ``classes_``."""
+    from real_time_predictive_maintenance_data_pipeline_spark.ml.artifact import (
+        _f32_cut,
+        artifact_column,
+    )
+
+    Forest = _sk_forest_class(monkeypatch)
+    a = _tree(  # temperature <= 74.5 ? (vibration <= 2.5 ? 0 : 1) : 1
+        [1, 3, -1, -1, -1], [2, 4, -1, -1, -1], [0, 1, -2, -2, -2],
+        [74.5, 2.5, -2, -2, -2], [[[0, 0]], [[0, 0]], [[0, 5]], [[10, 0]], [[0, 3]]],
+    )
+    b = _tree(  # temperature <= 80.25 ? weights 3:1 (leans 0) : 1
+        [1, -1, -1], [2, -1, -1], [0, -2, -2], [80.25, -2, -2], [[[0, 0]], [[3, 1]], [[0, 4]]],
+    )
+    t, v = F.col("temperature"), F.col("vibration")
+    expected = F.when(
+        t <= F.lit(_f32_cut(74.5)), F.when(v <= F.lit(_f32_cut(2.5)), F.lit(0)).otherwise(F.lit(1))
+    ).otherwise(F.lit(1))
+    assert str(artifact_column(Forest([0, 1], a, b))) == str(expected)
+    only_alerts = _tree([-1], [-1], [-2], [-2], [[[7]]])
+    assert str(artifact_column(Forest([1], only_alerts))) == str(F.lit(1))
+
+
+def test_sklearn_forest_column_equals_predict(spark, hist):
+    """A real sklearn forest: the compiled column equals ``rf.predict``
+    at every cut ±1 float32 ulp, and on the generator's rows."""
+    pytest.importorskip("sklearn")
+    from real_time_predictive_maintenance_data_pipeline_spark.ml.anomaly import FEATURE_COLS
+    from real_time_predictive_maintenance_data_pipeline_spark.ml.artifact import (
+        _f32_cut,
+        artifact_column,
+        train_reference_artifact,
+    )
+
+    rf = train_reference_artifact(hist)
+    f32_ulp = lambda x, d: np.nextafter(np.float32(x), np.float32(d))  # noqa: E731
+    edges = []
+    for f in range(len(FEATURE_COLS)):
+        pts = set()
+        for est in rf.estimators_:
+            tree = est.tree_
+            for thr in tree.threshold[(tree.children_left != -1) & (tree.feature == f)]:
+                pts.update(float(x) for x in _edges(np.float32(thr), f32_ulp))
+                pts.update((_f32_cut(thr), math.nextafter(_f32_cut(thr), math.inf)))
+        edges.append(sorted(pts))
+
+    def against(xs, ys):  # each x against an even sample of ys
+        return [(x, y) for x in xs for y in ys[:: max(1, len(ys) // 20)]]
+
+    rows = against(edges[0], edges[1]) + [(x, y) for y, x in against(edges[1], edges[0])]
+    df = spark.createDataFrame(rows, "temperature double, vibration double").unionByName(
+        stream_telemetry_batch(spark, n=5_000).select(*FEATURE_COLS)
+    )
+    pdf = df.select("*", artifact_column(rf).alias("prediction")).toPandas()
+    expect = rf.predict(pdf[list(FEATURE_COLS)].to_numpy())
+    assert (pdf["prediction"].to_numpy() == expect).all()
+
+
+def test_unsupported_artifact_raises_type_error(spark, tmp_path):
+    from real_time_predictive_maintenance_data_pipeline_spark.ml.artifact import (
+        save_artifact,
+        score_with_artifact,
+    )
+
+    path = str(tmp_path / "not_a_model.bin")
+    save_artifact({"temperature": 78.5}, path)
+    df = spark.createDataFrame([(70.0, 1.0)], "temperature double, vibration double")
+    with pytest.raises(TypeError, match="dict"):
+        score_with_artifact(df, path)
 
 
 def test_quality_classifier_accuracy_floor(spark):

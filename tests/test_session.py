@@ -3,7 +3,10 @@ core count, and no environment variable overrides the engine confs."""
 
 from __future__ import annotations
 
+import sys
+
 from real_time_predictive_maintenance_data_pipeline_spark.session import (
+    _ship_package,
     apply_confs,
     spark_confs,
 )
@@ -39,3 +42,16 @@ def test_spark_confs_ignore_the_retired_env_knobs(monkeypatch):
     for knob in ("CPUS", "SHUFFLE_PARTITIONS", "DRIVER_MEM"):
         monkeypatch.setenv(f"SPARK_GRAFT_{knob}", "7")
     assert spark_confs(4)["spark.sql.shuffle.partitions"] == "4"
+
+
+def test_ship_package_adds_its_zip_once(spark):
+    """Every ``apply_confs`` ships the package; only the first adds the
+    zip, so neither the context's includes nor ``sys.path`` grow."""
+    includes = spark.sparkContext._python_includes
+    _ship_package(spark)
+    path_len = len(sys.path)
+    _ship_package(spark)
+    _ship_package(spark)
+    zips = [n for n in includes if n.startswith("real_time_predictive_maintenance")]
+    assert len(zips) == 1, includes
+    assert len(sys.path) == path_len

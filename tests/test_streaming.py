@@ -738,9 +738,9 @@ def test_drift_monitor_ewma_state(spark, tmp_path):
 
 def test_artifact_scored_stream(spark, payload_dir, tmp_path):
     """O22/O26 artifact path composes with Structured Streaming: the
-    predict_batch_udf scorer (executor-side artifact load, Arrow
-    batches) runs inside a streaming plan, same decision function as
-    the MLlib path on the separable generator data."""
+    artifact, compiled on the driver into a ``CASE WHEN`` column,
+    scores inside a streaming plan, same decision function as the
+    MLlib path on the separable generator data."""
     from real_time_predictive_maintenance_data_pipeline_spark.ml.artifact import (
         save_artifact,
         score_with_artifact,
