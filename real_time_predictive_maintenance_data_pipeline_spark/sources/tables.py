@@ -7,13 +7,17 @@ lineitem events documents embeddings — one parquet file per table under
 Scale notes: at 100 TB these would be partitioned/bucketed datasets, not
 single files; the loaders keep the path layout abstract so a cluster
 deployment only swaps the path template. Predicate pushdown and column
-pruning flow from the callers' ``select``/``filter`` — loaders never
-materialize or cache.
+pruning flow from the callers' ``select``/``filter``. Loaders never
+materialize or cache rows: ``load_table`` memoizes the lazy scan plan
+(one DataFrame per session and file version, see ``_DF_MEMO``), which
+is metadata, like a catalog's table entry.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,37 +45,38 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: In-process memo of INFERRED PARQUET SCHEMAS (metadata only — never
-#: rows, never results). ``spark.read.parquet`` without a schema runs
-#: footer inference + file-index construction on every call — measured
-#: ~165 ms per load vs ~30 ms with an explicit schema, and one bench
-#: pass issues ~37 loads (lineitem alone is loaded by ~10 headline
-#: queries), so re-inference was ~5 s of pure driver-side plan-build
-#: per pass. A real deployment gets this for free from the catalog
-#: (metastore / Iceberg manifests — the table schema is metadata, not
-#: data); this memo is the path-based twin. Keyed by (path, mtime_ns,
-#: size, nanosAsLong-conf): a regenerated fixture re-infers, and
-#: sessions whose legacy-nanos conf differs never share an entry (that
-#: conf changes what TIMESTAMP(NANOS) infers to). Dies with the
-#: process — nothing is persisted across runs.
-_SCHEMA_MEMO: dict[tuple, object] = {}
+#: In-process memo of finished ``load_table`` DataFrames: lazy scan
+#: plans, never rows or results. Building a scan is driver-side plan
+#: work: footer schema inference (~165 ms a file) plus file-index
+#: construction and analysis (4-7 ms a call with a known schema), and
+#: one catalog pass loads the 10 fixture files ~50 times. A real
+#: deployment gets the table entry from its catalog (metastore, Iceberg
+#: manifests); this memo is the path-based twin.
+#:
+#: Outer key: the owning SparkSession, held weakly, so a new session
+#: never shares a plan bound to another one. Inner key: (path,
+#: mtime_ns, size, nanosAsLong conf, per-file stats of a directory), so
+#: a rewritten fixture or a changed conf gets a fresh scan. Each
+#: memoized DataFrame references its session, which keeps the weak key
+#: alive; ``_session_memo`` therefore drops the entries of stopped
+#: sessions itself. Dies with the process; nothing is persisted.
+_DF_MEMO: weakref.WeakKeyDictionary[SparkSession, dict[tuple, DataFrame]] = (
+    weakref.WeakKeyDictionary()
+)
+_DF_MEMO_LOCK = threading.Lock()
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan; schema comes from parquet footer metadata
-    (inferred once per file version per process — see _SCHEMA_MEMO).
+def _session_memo(spark: SparkSession) -> dict[tuple, DataFrame]:
+    with _DF_MEMO_LOCK:
+        for stopped in [s for s in _DF_MEMO if s.sparkContext._jsc is None]:
+            del _DF_MEMO[stopped]
+        return _DF_MEMO.setdefault(spark, {})
 
-    ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark reads only as
-    a nano-count long (`spark.sql.legacy.parquet.nanosAsLong`); we
-    normalize it to a micro-precision TimestampType here — the same
-    truncation DuckDB applies — so every downstream query sees a real
-    timestamp column.
-    """
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = table_path(sf_dir, name)
+
+def _file_key(spark: SparkSession, path: str) -> tuple | None:
+    """Memo key of the file version at ``path``; None if it is missing."""
     try:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size, spark.conf.get(_NANOS_CONF, "false"))
@@ -80,7 +85,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # not touch any directory's own mtime/size, so fold every
             # file's (relative path, mtime, size) into the key, at any
             # depth (hive partitions nest part files under ``k=v/``) —
-            # a stale schema can then never be served for a re-written
+            # a stale plan can then never be served for a re-written
             # part file. Fixtures are single files today; this keeps
             # the memo correct if that ever changes.
             files = []
@@ -93,17 +98,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     )
             key = key + tuple(sorted(files))
     except OSError:
-        key = None  # let spark.read surface the missing-path error
-    schema = _SCHEMA_MEMO.get(key) if key is not None else None
-    if schema is None:
+        return None  # let spark.read surface the missing-path error
+    return key
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy parquet scan, built once per session and file version and
+    then served from ``_DF_MEMO``: repeated loads return the same
+    DataFrame object, so callers must treat it as immutable (every
+    DataFrame method already returns a new one). Self-joins of one
+    table need aliases, as they would on any shared DataFrame.
+
+    ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark reads only as
+    a nano-count long (`spark.sql.legacy.parquet.nanosAsLong`); we
+    normalize it to a micro-precision TimestampType here — the same
+    truncation DuckDB applies — so every downstream query sees a real
+    timestamp column. The memo holds the normalized DataFrame.
+    """
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = table_path(sf_dir, name)
+    key = _file_key(spark, path)
+    memo = _session_memo(spark)
+    df = memo.get(key) if key is not None else None
+    if df is None:
         df = spark.read.parquet(path)
+        if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
+            # integer DIV keeps full precision (nanos exceed double's 2^53)
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
         if key is not None:
-            _SCHEMA_MEMO[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
-    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
-        # integer DIV keeps full precision (nanos exceed double's 2^53)
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+            memo[key] = df
     return df
 
 

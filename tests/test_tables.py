@@ -14,12 +14,16 @@ has to land on the same microsecond values.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from real_time_predictive_maintenance_data_pipeline_spark.functions.timeutil import (
     epoch_us,
 )
+from real_time_predictive_maintenance_data_pipeline_spark.sources import tables as TB
 from real_time_predictive_maintenance_data_pipeline_spark.sources.tables import (
     load_table,
 )
@@ -76,26 +80,22 @@ def test_load_table_normalizes_nanos_and_micros_identically(spark, tmp_path):
     assert got["nanos"] == got["micros"] == _US_TRUNC
 
 
-def test_load_table_schema_memo_invalidates_on_rewrite(spark, tmp_path):
-    """The r16 schema memo caches INFERRED SCHEMAS per (path, mtime,
-    size): repeated loads must skip footer inference (same DataFrame
-    schema from the memo), and rewriting the file — the driver
-    regenerates fixtures between rounds — must re-infer, never serve
-    the stale schema."""
+def test_load_table_memo_invalidates_on_rewrite(spark, tmp_path):
+    """The DataFrame memo serves one scan per (session, path, mtime,
+    size): repeated loads must return the memoized DataFrame, and
+    rewriting the file — fixtures get regenerated —
+    must build a fresh scan, never serve the stale plan."""
     import time as _time
-
-    from real_time_predictive_maintenance_data_pipeline_spark.sources import (
-        tables as TB,
-    )
 
     d = tmp_path / "memo"
     d.mkdir()
     _write_events(d, pa.array(_US_TRUNC, pa.timestamp("us")))
     first = load_table(spark, str(d), "events")
-    memo_size = len(TB._SCHEMA_MEMO)
+    memo_size = len(TB._DF_MEMO[spark])
     again = load_table(spark, str(d), "events")
     assert again.schema == first.schema
-    assert len(TB._SCHEMA_MEMO) == memo_size  # served from the memo
+    assert again is first
+    assert len(TB._DF_MEMO[spark]) == memo_size  # served from the memo
 
     # rewrite the SAME path with a different physical type (the round-2
     # nanos -> micros drift in miniature, reversed); ensure a distinct
@@ -103,8 +103,9 @@ def test_load_table_schema_memo_invalidates_on_rewrite(spark, tmp_path):
     _time.sleep(0.01)
     _write_events(d, pa.array(_NS, pa.timestamp("ns")))
     rewritten = load_table(spark, str(d), "events")
+    assert rewritten is not first
     # a stale memo hit would mis-read the nanos file through the micros
-    # schema; the stat-keyed memo must re-infer and still normalize
+    # plan; the stat-keyed memo must build a new scan and still normalize
     rows = (
         rewritten.select("event_id", epoch_us("ts").alias("us"))
         .orderBy("event_id")
@@ -113,12 +114,12 @@ def test_load_table_schema_memo_invalidates_on_rewrite(spark, tmp_path):
     assert [r.us for r in rows] == _US_TRUNC
 
 
-def test_load_table_schema_memo_invalidates_on_dir_part_rewrite(spark, tmp_path):
-    """Directory-layout hardening (r17, ADVICE r16): rewriting a part
-    file IN PLACE does not change the directory's own mtime/size, so a
-    memo keyed only on the directory stat would serve the stale schema.
-    The key now folds every child's (name, mtime, size) in — the
-    rewritten part must re-infer."""
+def test_load_table_memo_invalidates_on_dir_part_rewrite(spark, tmp_path):
+    """Directory-layout hardening: rewriting a part file IN PLACE does
+    not change the directory's own mtime/size, so a memo keyed only on
+    the directory stat would serve the stale plan. The key folds every
+    child's (name, mtime, size) in — the rewritten part must get a
+    fresh scan."""
     import time as _time
 
     d = tmp_path / "dirtbl"
@@ -160,11 +161,11 @@ def test_load_table_schema_memo_invalidates_on_dir_part_rewrite(spark, tmp_path)
     assert [r.us for r in rows] == _US_TRUNC
 
 
-def test_load_table_schema_memo_sees_nested_hive_part_rewrite(spark, tmp_path):
+def test_load_table_memo_sees_nested_hive_part_rewrite(spark, tmp_path):
     """A hive-partitioned table nests its part files under ``k=v/``
     directories. Rewriting such a part file in place changes neither
     the table directory nor any of its direct children, so the memo key
-    must cover every file at any depth: the new schema is re-inferred."""
+    must cover every file at any depth: the new schema is read."""
     import time as _time
 
     tbl = tmp_path / "region.parquet"
@@ -192,3 +193,88 @@ def test_load_table_schema_memo_sees_nested_hive_part_rewrite(spark, tmp_path):
         "r_regionkey",
     ]
     assert sorted(r.r_comment for r in rewritten.collect()) == ["x", "y"]
+
+
+def test_load_table_memo_returns_one_object_per_session_and_version(spark, tmp_path):
+    """Loads in one session of one file version return the same
+    DataFrame: the normalized ``events`` plan is built once."""
+    _write_events(tmp_path, pa.array(_US_TRUNC, pa.timestamp("us")))
+    first = load_table(spark, str(tmp_path), "events")
+    assert load_table(spark, str(tmp_path), "events") is first
+    assert first.sparkSession is spark
+
+
+def test_load_table_memo_gives_a_new_session_its_own_scan(spark, tmp_path):
+    """A plan is bound to the session that built it, so another session
+    gets its own DataFrame, memoized under that session."""
+    _write_events(tmp_path, pa.array(_US_TRUNC, pa.timestamp("us")))
+    ours = load_table(spark, str(tmp_path), "events")
+    other = spark.newSession()
+    theirs = load_table(other, str(tmp_path), "events")
+    assert theirs is not ours
+    assert theirs.sparkSession is other
+    assert load_table(other, str(tmp_path), "events") is theirs
+    assert load_table(spark, str(tmp_path), "events") is ours
+    us = theirs.select(epoch_us("ts").alias("us")).orderBy("us").collect()
+    assert [r.us for r in us] == _US_TRUNC
+
+
+def test_load_table_memo_drops_stopped_sessions(spark, tmp_path):
+    """Memoized plans reference their session, so the weak session key
+    alone never frees them; a stopped session's entry is dropped on the
+    next load."""
+
+    class StoppedSession:
+        sparkContext = SimpleNamespace(_jsc=None)
+
+    stopped = StoppedSession()
+    TB._DF_MEMO[stopped] = {}
+    _write_events(tmp_path, pa.array(_US_TRUNC, pa.timestamp("us")))
+    load_table(spark, str(tmp_path), "events")
+    assert stopped not in TB._DF_MEMO
+    assert spark in TB._DF_MEMO
+
+
+def test_memoized_self_join_matches_fresh_scans(spark, tmp_path):
+    """The TPC-H Q21 ``l1/l2/l3`` shape joins one memoized scan with
+    itself three times; aliased, it must return the rows of the same
+    joins over three independent ``spark.read.parquet`` loads."""
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array([1, 1, 2, 2, 3, 4, 4, 4], pa.int64()),
+                "l_suppkey": pa.array([10, 11, 20, 21, 30, 40, 40, 41], pa.int64()),
+                "l_returnflag": pa.array(["R", "N", "R", "R", "R", "R", "R", "A"]),
+            }
+        ),
+        str(tmp_path / "lineitem.parquet"),
+    )
+
+    def same_order_other_supp(o):
+        return (F.col(f"{o}.l_orderkey") == F.col("l1.l_orderkey")) & (
+            F.col(f"{o}.l_suppkey") != F.col("l1.l_suppkey")
+        )
+
+    def sole_returners(l1, l2, l3):
+        l1, l2, l3 = l1.alias("l1"), l2.alias("l2"), l3.alias("l3")
+        rows = (
+            l1.filter(F.col("l1.l_returnflag") == "R")
+            .join(l2, same_order_other_supp("l2"), "left_semi")
+            .join(
+                l3,
+                same_order_other_supp("l3") & (F.col("l3.l_returnflag") == "R"),
+                "left_anti",
+            )
+            .select("l1.l_orderkey", "l1.l_suppkey")
+            .collect()
+        )
+        return sorted(tuple(r) for r in rows)
+
+    memoized = [load_table(spark, str(tmp_path), "lineitem") for _ in range(3)]
+    assert memoized[0] is memoized[1] is memoized[2]
+    fresh = [spark.read.parquet(str(tmp_path / "lineitem.parquet")) for _ in range(3)]
+    assert sole_returners(*memoized) == sole_returners(*fresh) == [
+        (1, 10),
+        (4, 40),
+        (4, 40),
+    ]
